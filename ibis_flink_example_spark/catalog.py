@@ -130,7 +130,7 @@ _SPLIT_PROBE_CACHE_MAX = 256
 
 def _num_scan_partitions(df: DataFrame) -> int:
     try:
-        key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
+        key = (_app_id(df.sparkSession), df.semanticHash())
     except Exception:  # pragma: no cover - semanticHash is a developer API
         key = None
     if key is not None and key in _SPLIT_PROBE_CACHE:

@@ -83,23 +83,6 @@ def _literal_pattern(delimiter: str) -> str:
     return "\\Q" + delimiter + "\\E"
 
 
-def split_lines(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    delimiter: str = "\n",
-) -> DataFrame:
-    """Explode documents into (id, line_idx, line) units. Uses split +
-    posexplode — codegen'd, shuffle-free. ``delimiter`` picks the unit:
-    '\\n' for boilerplate lines, ' ' for df-based term pruning."""
-    return docs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.split(F.col(text_col), _literal_pattern(delimiter))
-        ).alias("line_idx", "line"),
-    )
-
-
 def line_document_frequency(
     lines: DataFrame, id_col: str = "doc_id", min_line_chars: int = 1
 ) -> DataFrame:

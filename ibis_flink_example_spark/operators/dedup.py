@@ -98,7 +98,7 @@ def drop_hot_keys(
         )
         if lazy_broadcast_hint:
             # For callers that run with AQE disabled (the micro-batch
-            # ingests, see queries_streaming._ingest_conf): static
+            # ingests, see streaming/ingest.py _ingest_conf): static
             # planning estimates the hot set from its corpus-sized child
             # and would pick a shuffle anti-join that re-exchanges the
             # probe side every batch. The hint pins the broadcast the

@@ -114,14 +114,6 @@ def real_decoder_available() -> bool:
         return False
 
 
-def _fake_pixel_stats(payload: bytes) -> tuple[float, int, int]:
-    """Deterministic fake 'decode': interpret payload bytes as pixels.
-    (mean_byte, min_byte, max_byte) — stable stand-ins for channel stats."""
-    if not payload:
-        return (0.0, 0, 0)
-    return (sum(payload) / len(payload), min(payload), max(payload))
-
-
 # --- mapInPandas stages -----------------------------------------------------
 
 FEATURES_SCHEMA = T.StructType(

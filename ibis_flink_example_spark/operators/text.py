@@ -64,16 +64,6 @@ def token_count_regex(text_col: str) -> Column:
     return F.size(F.regexp_extract_all(F.col(text_col), F.lit(TOKEN_REGEX), 0))
 
 
-def marker_hits(text_col: str, markers: list[str]) -> Column:
-    """How many words of the doc are in the marker lexicon (multiset count)."""
-    return F.size(
-        F.filter(
-            words(text_col),
-            lambda w: F.lower(w).isin([m.lower() for m in markers]),
-        )
-    )
-
-
 def lang_id(text_col: str) -> Column:
     """Argmax over marker-lexicon hit counts; deterministic tie-break by
     lexicon declaration order; 'und' when nothing matches.

@@ -11,7 +11,7 @@ checks true batch-vs-stream equivalence, the reference's core semantics
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ibis_flink_example_spark.catalog import load_table, table_path
@@ -22,6 +22,12 @@ from ibis_flink_example_spark.operators.checkpoints import (
 from ibis_flink_example_spark.operators.time_windows import session, slide, tumble
 from ibis_flink_example_spark.queries import query
 from ibis_flink_example_spark.schema import EVENTS_SCHEMA
+from ibis_flink_example_spark.streaming.ingest import (
+    STATE_PARTS,
+    IngestContext,
+    append_bucketed,
+    replay_ingest,
+)
 
 # ---------------------------------------------------------------------------
 # W3 batch forms
@@ -137,93 +143,6 @@ def session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# State-partition count for the bounded verification runs below: streaming
-# state partitioning is latched at first checkpoint and each micro-batch pays
-# a fixed per-partition state-store cost, so it is sized to the workload
-# (thousands of keys here -> 8), NOT inherited from the relational shuffle
-# setting. On a real cluster size this to executors x cores and state volume.
-_STATE_PARTS = 4
-
-
-# Per-batch input size above which AQE stays ON for ingest batch jobs
-# (r16, VERDICT r15 #5): AQE's per-exchange replan latency (~0.2-0.3 s a
-# round) amortizes once a micro-batch carries enough data for runtime
-# coalescing/skew-splitting to matter; 256 MB ≈ one advisory shuffle
-# partition per exchange — below that a static plan cannot mis-size badly.
-_INGEST_AQE_MIN_BATCH_BYTES = 256 * 1024 * 1024
-
-
-def _max_file_bytes(stage_dir: str) -> int:
-    """Largest file in a staged replay dir = per-batch input bound under
-    maxFilesPerTrigger=1 (driver-side os.stat metadata only)."""
-    import os
-
-    sizes = [
-        os.path.getsize(os.path.join(stage_dir, f))
-        for f in os.listdir(stage_dir)
-        if os.path.isfile(os.path.join(stage_dir, f))
-    ]
-    return max(sizes, default=0)
-
-
-def _ingest_conf(sess, *, approx_batch_bytes: int | None = None) -> None:
-    """Per-batch job tuning for a conf-isolated ingest session (the
-    ``state_scoped_session`` clone a foreachBatch arm runs its batch
-    jobs on — no other query's conf changes).
-
-    1. Direct task-commit (FileOutputCommitter algorithm 2): per-batch
-       state appends skip the job-commit rename pass — measured worth
-       ~1 s over a 4-batch replay at sf0.1 against the v1 (two-rename)
-       default. Safe here: local-FS renames are atomic, the scratch
-       state tables are dropped and rebuilt per run, and a mid-run
-       failure aborts the whole query — the v1 "job-commit is atomic"
-       property buys nothing for this shape. An object-store deployment
-       would use the store's native committer instead.
-    2. AQE sized to the MICRO-BATCH, not the session (r15 measured, r16
-       size-aware per VERDICT r15 #5): AQE materializes EVERY Exchange
-       of a per-batch plan as its own driver-synchronous job round (plus
-       a replan+recompile per round), which on a micro-batch-sized DAG
-       of ~10 exchanges is pure fixed latency — measured 34.0 s -> 15.3 s
-       on the 4-batch semdedup replay at sf0.1, with identical results.
-       This mirrors Spark's own choice of disabling AQE inside streaming
-       plans for latency. But at 100 TB a single micro-batch can be
-       cluster-sized, where losing AQE's coalescing and skew-split is
-       the wrong trade — so the dial is SIZE-AWARE: callers pass their
-       per-batch input bound (``approx_batch_bytes``, e.g.
-       ``_max_file_bytes(stage)`` under maxFilesPerTrigger=1) and AQE
-       stays ON when it crosses ``_INGEST_AQE_MIN_BATCH_BYTES``. The one
-       plan decision small batches wanted from AQE — the hot-key cap's
-       guarded broadcast anti-join — is handled explicitly
-       (``drop_hot_keys(lazy_broadcast_hint=...)``).
-       SPARK_GRAFT_INGEST_AQE=1/0 still force-overrides both regimes.
-    """
-    import os
-
-    sess.conf.set(
-        "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
-    )
-    env = os.environ.get("SPARK_GRAFT_INGEST_AQE")
-    if env is not None and env in ("0", "1"):
-        enable = env == "1"
-    else:
-        enable = (approx_batch_bytes or 0) >= _INGEST_AQE_MIN_BATCH_BYTES
-    sess.conf.set("spark.sql.adaptive.enabled", "true" if enable else "false")
-
-
-def _arrival_tags(bdf: DataFrame, col: str = "arrival_batch") -> list[int]:
-    """Distinct arrival tags of a micro-batch, as [tag] when exactly one
-    (the normal case) else [lo, hi]. The replay-disorder guards only need
-    "exactly one tag" plus its value, which min == max proves — so this
-    is ONE partial-aggregated no-exchange job instead of the former
-    distinct + shuffle + collect (measured ~0.6 s/batch of pure probe
-    cost at sf0.1 across the ingest arms, r15)."""
-    r = bdf.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
-    if r["lo"] is None:
-        return []
-    lo, hi = int(r["lo"]), int(r["hi"])
-    return [lo] if lo == hi else [lo, hi]
-
-
 _STREAM_DIRS: dict[str, str] = {}
 
 
@@ -245,7 +164,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The stream is built on a ``state_scoped_session`` CLONE of the caller's
     session (shared context/catalog, private SQLConf) carrying
-    ``_STATE_PARTS`` shuffle/state partitions — every downstream stage and
+    ``STATE_PARTS`` shuffle/state partitions — every downstream stage and
     ``run_available_now``/``foreach_batch`` inherit it through the
     DataFrame, so no streaming query ever mutates the caller's session
     conf (concurrency-safe; the decode flags below also land on the clone).
@@ -260,7 +179,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ibis_flink_example_spark.sources.files import _nanos_timestamp_columns
     from ibis_flink_example_spark.streaming.runtime import state_scoped_session
 
-    spark = state_scoped_session(spark, _STATE_PARTS)
+    spark = state_scoped_session(spark, STATE_PARTS)
     path = table_path(sf_dir, "events")
     if "ts" in _nanos_timestamp_columns(path):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -1231,64 +1150,22 @@ def streaming_decontaminate_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     batch (at 100 TB the guarded decontaminate_ngram_overlap operator
     provides the shuffle fallback if an eval set ever outgrows its
     broadcast budget)."""
-    import os
-    import time
-
     import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    from ibis_flink_example_spark.catalog import scratch_dir, table_path
-    from ibis_flink_example_spark.operators.dedup import word_shingles, words
-    from ibis_flink_example_spark.schema import schema as mk_schema
+    from ibis_flink_example_spark.operators.dedup import (
+        _release_local_checkpoint,
+        word_shingles,
+        words,
+    )
 
-    stage = scratch_dir("decontam_replay", sf_dir)
-    for f in os.listdir(stage):
-        os.remove(os.path.join(stage, f))
-    tbl = pq.read_table(
-        table_path(sf_dir, "documents"), columns=["doc_id", "text"]
-    )
-    # plant CONTAMINATION WITNESSES: every eval doc re-arrives as an
-    # ingest doc under doc_id + 2,000,000 (2e6 % 97 = 54, so planted ids
-    # never land in the eval residue class) — without them the fixture
-    # has zero natural 13-gram overlap and the row would be trivially
-    # all-false (the capped-image-arm evidence lesson, VERDICT r11 #3)
-    is_ev = pc.equal(
-        pc.subtract(
-            tbl.column("doc_id"),
-            pc.multiply(
-                pc.divide(tbl.column("doc_id"), pa.scalar(97, pa.int64())),
-                pa.scalar(97, pa.int64()),
-            ),
-        ),
-        pa.scalar(0, pa.int64()),
-    )
-    planted = tbl.filter(is_ev)
-    planted = planted.set_column(
-        0,
-        "doc_id",
-        pc.add(planted.column("doc_id"), pa.scalar(2_000_000, pa.int64())),
-    )
-    tbl = pa.concat_tables([tbl, planted])
-    arr = pc.cast(
-        pc.bit_wise_and(tbl.column("doc_id"), pa.scalar(3, pa.int64())),
-        pa.int32(),
-    )
-    tbl = tbl.append_column("arrival_batch", arr)
-    base = time.time() - 3600
-    for k in range(4):
-        part = tbl.filter(
-            pc.equal(tbl.column("arrival_batch"), pa.scalar(k, pa.int32()))
-        )
-        p = os.path.join(stage, f"batch_{k}.parquet")
-        pq.write_table(part, p)
-        os.utime(p, (base + 2 * k, base + 2 * k))
-
-    sch = mk_schema(
-        {"doc_id": "int64", "text": "string", "arrival_batch": "int32"}
-    )
-    from ibis_flink_example_spark.catalog import drop_table_and_location
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
+    def plant_witnesses(tbl):
+        # every eval doc re-arrives as an ingest doc under doc_id +
+        # 2,000,000 (2e6 % 97 = 54, so planted ids never land in the eval
+        # residue class): the fixture has no natural 13-gram overlap, and
+        # without witnesses the result would be trivially all-false
+        ev = tbl.filter(pa.array(tbl.column("doc_id").to_numpy() % 97 == 0))
+        ids = ev.column("doc_id").to_numpy() + 2_000_000
+        return pa.concat_tables([tbl, ev.set_column(0, "doc_id", pa.array(ids))])
 
     ev_grams = (
         load_table(spark, sf_dir, "documents")
@@ -1298,13 +1175,8 @@ def streaming_decontaminate_ingest(spark: SparkSession, sf_dir: str) -> DataFram
         .localCheckpoint(eager=True)  # built once, probed per batch
     )
     res_t = "decontam_ingest_results"
-    drop_table_and_location(spark, res_t)
-    state = {"last_bid": None}
 
-    def apply(bdf, bid):
-        # re-delivery guard (streaming_upsert_totals idiom)
-        if state["last_bid"] is not None and bid <= state["last_bid"]:
-            return
+    def step(bdf, ctx):
         ingest = bdf.filter(F.col("doc_id") % 97 != 0)
         grams = ingest.select(
             "doc_id",
@@ -1322,9 +1194,9 @@ def streaming_decontaminate_ingest(spark: SparkSession, sf_dir: str) -> DataFram
                 (F.col("doc_id") % 4).cast("long").alias("batch_id"),
             )
             # hits is batch-bounded (ids of the current batch only);
-            # broadcast-hinted because the batch jobs run with AQE off —
-            # the static planner would otherwise estimate it from its
-            # corpus-sized ancestors (r16, the semdedup/minhash idiom)
+            # broadcast-hinted because the batch jobs run with AQE off,
+            # where the static planner would estimate it from its
+            # corpus-sized ancestors
             .join(F.broadcast(hits), "doc_id", "left")
             .select(
                 "doc_id",
@@ -1333,27 +1205,18 @@ def streaming_decontaminate_ingest(spark: SparkSession, sf_dir: str) -> DataFram
             )
         )
         res.write.mode("append").saveAsTable(res_t)
-        state["last_bid"] = bid
 
-    sess_stream = _docs_stream_session(spark)
-    _ingest_conf(sess_stream, approx_batch_bytes=_max_file_bytes(stage))
-    stream = (
-        sess_stream
-        .readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    replay_ingest(
+        spark,
+        sf_dir,
+        "decontam_replay",
+        source="documents",
+        columns=("doc_id", "text"),
+        transform=plant_witnesses,
+        tables=(res_t,),
+        step=step,
     )
-    q = foreach_batch(stream, apply, available_now=True)
-    q.awaitTermination()
-    from ibis_flink_example_spark.operators.dedup import (
-        _release_local_checkpoint,
-    )
-
     _release_local_checkpoint(ev_grams)
-    if state["last_bid"] is None:
-        return spark.createDataFrame(
-            [], "doc_id long, batch_id long, contaminated boolean"
-        )
     return spark.table(res_t).select("doc_id", "batch_id", "contaminated")
 
 
@@ -1393,100 +1256,33 @@ FROM w LEFT JOIN rej ON w.doc_id = rej.id_n
 
 @query("streaming_neardup_ingest", oracle=_NEARDUP_INGEST_ORACLE)
 def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming near-dup ingest (X2's incremental arm, the VERDICT-r8
-    commission): the corpus replayed as four mtime-ordered arrival files
-    (``doc_id % 4``), each micro-batch probed by EXACT 3-gram Jaccard
-    (>= 1/2, integer cross-multiplication — no float) against (a) the
-    persistent shingle state of every previously-arrived doc and (b)
-    smaller-id docs in its own batch, i.e. first-arrival-wins seen-corpus
-    dedup. Per-batch cost is bounded by batch-x-state shingle
-    co-occurrence (never all-pairs, never a corpus rescan: the size table
-    is maintained incrementally, the state tables only ever APPEND).
-    foreachBatch re-delivery is guarded by batch id, and replay order is
-    ASSERTED from an in-data arrival tag — disorder raises rather than
-    silently accepting a wrong prefix semantics. A production stack swaps
-    the exact scorer for the MinHash/LSH candidate path (same state
-    shape); exact Jaccard keeps this row fully DuckDB-oracle-able as a
-    pure arrival-prefix definition. Returns one row per doc:
+    """Streaming near-dup ingest (X2's incremental arm): the corpus
+    replayed as four mtime-ordered arrival files (``doc_id % 4``), each
+    micro-batch probed by EXACT 3-gram Jaccard (>= 1/2, integer
+    cross-multiplication — no float) against (a) the persistent shingle
+    state of every previously-arrived doc and (b) smaller-id docs in its
+    own batch, i.e. first-arrival-wins seen-corpus dedup. Per-batch cost
+    is bounded by batch-x-state shingle co-occurrence (never all-pairs,
+    never a corpus rescan: the size table is maintained incrementally,
+    the state tables only ever APPEND). Re-delivery and replay order are
+    guarded by the replay harness (streaming/ingest.py). A production
+    stack swaps the exact scorer for the MinHash/LSH candidate path (same
+    state shape); exact Jaccard keeps this row fully DuckDB-oracle-able
+    as a pure arrival-prefix definition. Returns one row per doc:
     (doc_id, batch_id, accepted)."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ibis_flink_example_spark.catalog import (
-        drop_table_and_location,
-        scratch_dir,
-        table_path,
-    )
     from ibis_flink_example_spark.operators.dedup import (
         _release_local_checkpoint,
         shingle_hash_rows,
         shingle_match_ids,
     )
-    from ibis_flink_example_spark.schema import schema as mk_schema
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
 
-    # --- stage the corpus as 4 deterministic arrival files (driver-side
-    # pyarrow split: staging is replay INFRA, not the operator — at scale
-    # the stream already exists and nothing is staged). Stable scratch dir
-    # + full rewrite per run (the scratch_dir leak policy).
-    stage = scratch_dir("neardup_replay", sf_dir)
-    for f in os.listdir(stage):
-        os.remove(os.path.join(stage, f))
-    # only the columns the pipeline consumes are staged (the stream
-    # selects doc_id/text/arrival_batch anyway — staging the rest would
-    # just double the replay bytes)
-    tbl = pq.read_table(
-        table_path(sf_dir, "documents"), columns=["doc_id", "text"]
-    )
-    arr = pc.cast(
-        pc.bit_wise_and(tbl.column("doc_id"), pa.scalar(3, pa.int64())),
-        pa.int32(),
-    )
-    tbl = tbl.append_column("arrival_batch", arr)
-    base = time.time() - 3600  # safely in the past; +2s per file for order
-    for k in range(4):
-        part = tbl.filter(pc.equal(tbl.column("arrival_batch"), pa.scalar(k, pa.int32())))
-        p = os.path.join(stage, f"batch_{k}.parquet")
-        pq.write_table(part, p)
-        os.utime(p, (base + 2 * k, base + 2 * k))
-
-    sch = mk_schema(
-        {"doc_id": "int64", "text": "string", "arrival_batch": "int32"}
-    )
     res_t = "neardup_ingest_results"
     seen_sh_t = "neardup_ingest_seen_sh"
     seen_sz_t = "neardup_ingest_seen_sizes"
-    for t in (res_t, seen_sh_t, seen_sz_t):
-        drop_table_and_location(spark, t)
 
-    state = {"last_bid": None, "last_arr": -1, "has_seen": False}
-
-    def apply(bdf, bid):
-        # at-least-once re-delivery guard (streaming_upsert_totals idiom):
-        # an already-applied batch must not append its rows twice. The
-        # guard covers fully-committed batches only: a failure BETWEEN the
-        # res_t append and the state-table appends, followed by a restart
-        # (this in-memory dict is lost), could double-append — at-least-
-        # once, not exactly-once. Fine here (tables are dropped per run);
-        # a durable deployment would overwrite a per-batch partition
-        # keyed on batch_id to make every append idempotent.
-        if state["last_bid"] is not None and bid <= state["last_bid"]:
+    def step(bdf, ctx):
+        if ctx.probe(bdf) is None:
             return
-        arrs = _arrival_tags(bdf)
-        if not arrs:
-            state["last_bid"] = bid
-            return
-        if len(arrs) != 1 or arrs[0] <= state["last_arr"]:
-            raise RuntimeError(
-                f"neardup ingest: replay disorder — arrival tags {arrs} "
-                f"after {state['last_arr']} (maxFilesPerTrigger/mtime "
-                "staging violated); refusing to mis-order the prefix"
-            )
-        arrival = int(arrs[0])
         sess = bdf.sparkSession
         # one shingle pass per batch, materialized once: the within-batch
         # self-join, the state probe, the size aggregate and the state
@@ -1512,7 +1308,7 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             pool_sizes=sizes_b,
             restrict_smaller_pool_id=True,
         )
-        if state["has_seen"]:
+        if not ctx.first:
             rejected = rejected.unionByName(
                 shingle_match_ids(
                     sh_b,
@@ -1523,10 +1319,10 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).distinct()
         res = (
-            # batch_id comes off the data (the disorder guard proved the
+            # batch_id comes off the data (the arrival check proved the
             # batch single-tagged) so the stage's generated code is
             # byte-identical across batches — a per-batch literal here
-            # forced a recompile of the result join every batch (r15).
+            # forces a recompile of the result join every batch
             bdf.select(
                 "doc_id",
                 F.col("arrival_batch").cast("long").alias("batch_id"),
@@ -1541,47 +1337,27 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         res.write.mode("append").saveAsTable(res_t)
         # seen-corpus policy: ALL arrivals join the state (a doc similar to
         # an already-rejected one is still a duplicate of its cluster).
-        # The shingle state is BUCKETED on the probe key: the next batch's
-        # join then reads the corpus-sized state pre-partitioned (scan
-        # reports hashpartitioning(shingle)) and only the small batch side
-        # exchanges — the state never reshuffles, which is the difference
-        # between per-batch cost O(batch + co-occurrence) and O(corpus)
-        # at 100 TB. (Appends to a bucketed table keep the spec.)
-        # appends REPARTITION onto the bucket key first (r13, from the
-        # minhash sibling's rewrite): a misaligned bucketed write emits
-        # tasks x buckets files per batch — measured 2.5x slower to
-        # append AND to re-read on later batches; sizes are bucketed on
-        # their doc-id join key too (the r12 #2a lesson applied here).
-        # The eager sh_b checkpoint itself STAYS: an A/B of the
-        # state-table-first rewrite (as shipped for the minhash sibling)
-        # read ~20% SLOWER for this query — without a folded table or
-        # union to eliminate, re-reading the batch from parquet three
-        # times loses to the in-memory checkpoint.
-        sh_b.repartition(_STATE_PARTS, F.col("shingle")).write.mode(
-            "append"
-        ).bucketBy(_STATE_PARTS, "shingle").sortBy("shingle").saveAsTable(
-            seen_sh_t
-        )
-        sizes_b.repartition(_STATE_PARTS, F.col("doc_id")).write.mode(
-            "append"
-        ).bucketBy(_STATE_PARTS, "doc_id").saveAsTable(seen_sz_t)
+        # Both state tables are bucketed on their probe keys, so the next
+        # batch's join reads the corpus-sized state pre-partitioned and
+        # only the small batch side exchanges — per-batch cost
+        # O(batch + co-occurrence), not O(corpus). The eager sh_b
+        # checkpoint stays: an A/B of the minhash sibling's
+        # state-table-first form read ~20% SLOWER here — without a folded
+        # table or union to eliminate, re-reading the batch from parquet
+        # three times loses to the in-memory checkpoint.
+        append_bucketed(sh_b, seen_sh_t, "shingle")
+        append_bucketed(sizes_b, seen_sz_t, "doc_id")
         _release_local_checkpoint(sh_b)
-        state["last_bid"] = bid
-        state["last_arr"] = arrival
-        state["has_seen"] = True
 
-    sess_stream = _docs_stream_session(spark)
-    _ingest_conf(sess_stream, approx_batch_bytes=_max_file_bytes(stage))
-    stream = (
-        sess_stream
-        .readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    replay_ingest(
+        spark,
+        sf_dir,
+        "neardup_replay",
+        source="documents",
+        columns=("doc_id", "text"),
+        tables=(res_t, seen_sh_t, seen_sz_t),
+        step=step,
     )
-    q = foreach_batch(stream, apply, available_now=True)
-    q.awaitTermination()
-    if state["last_bid"] is None:  # zero micro-batches: empty, not a crash
-        return spark.createDataFrame([], "doc_id long, batch_id long, accepted boolean")
     return spark.table(res_t).select("doc_id", "batch_id", "accepted")
 
 
@@ -1599,8 +1375,8 @@ def _minhash_ingest_oracle() -> str:
     the cap unless the fixture itself exceeds 6,250 documents —
     `tests/test_plan_audits.py::test_minhash_ingest_band_cap_headroom`
     pins that premise at every gate SF and fails loudly on a fixture
-    refresh that invalidates it (ADVICE r12: deterministic caps are
-    either mirrored in the oracle or pinned inert)."""
+    refresh that invalidates it (a deterministic cap is either mirrored
+    in the oracle or pinned inert)."""
     from ibis_flink_example_spark.operators.sampling import hex_prefix_int_sql
 
     # permutation j = 8-hex slice (j % 4) of md5 group (j DIV 4) — four
@@ -1659,11 +1435,10 @@ FROM w LEFT JOIN rej ON w.doc_id = rej.id_n
 
 @query("streaming_minhash_neardup_ingest", oracle=_minhash_ingest_oracle())
 def streaming_minhash_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION-shaped sibling of streaming_neardup_ingest
-    (VERDICT r11 #7b, named by that query's own docstring): candidate
-    generation through BANDED MINHASH over the same append-only state
-    instead of full shingle co-occurrence. Per batch: one engine-portable
-    md5 k-rehash signature pass (operators/dedup.py:
+    """The PRODUCTION-shaped sibling of streaming_neardup_ingest:
+    candidate generation through BANDED MINHASH over the same append-only
+    state instead of full shingle co-occurrence. Per batch: one
+    engine-portable md5 k-rehash signature pass (operators/dedup.py:
     md5_minhash_band_rows — 16 hashes, 8 bands x 2 rows; the xxhash64
     OPH arm is the cheaper non-replayable production default), band rows
     equi-joined against the persistent band state + smaller-id same-batch
@@ -1673,164 +1448,84 @@ def streaming_minhash_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
     Per-batch cost is bounded by band-bucket co-occupancy (8 rows per doc
     in the band join, never per-shingle co-occurrence); BOTH state
     tables (band rows — which also carry the per-doc shingle counts the
-    exact verify needs — and shingles) are BUCKETED on their join keys
-    with bucket-aligned appends, each batch's derived frames land
-    DIRECTLY in them (the r12-VERDICT #2 trim: the appends the batch
-    owes anyway replace the former eager localCheckpoints, state unions
-    and the separate doc-sizes table — consumers re-read
-    pre-partitioned, current-batch reads file-stats-prune on the
-    arrival column), and all state tables only APPEND. Same replay
-    infra, re-delivery guard and arrival-order assertion as the exact
-    sibling. Returns one row per doc: (doc_id, batch_id, accepted)."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ibis_flink_example_spark.catalog import (
-        drop_table_and_location,
-        scratch_dir,
-        table_path,
-    )
+    exact verify needs and the accepted flag — and shingles) are
+    BUCKETED on their join keys with bucket-aligned appends, each batch's
+    derived frames land DIRECTLY in them (no eager localCheckpoints,
+    state unions or separate doc-sizes table — consumers re-read
+    pre-partitioned, current-batch reads file-stats-prune on the arrival
+    column), and all state tables only APPEND. Same replay harness as the
+    exact sibling. Returns one row per doc: (doc_id, batch_id, accepted)."""
     from ibis_flink_example_spark.operators.dedup import (
         drop_hot_keys,
         md5_minhash_band_rows,
         word_shingles,
         words,
     )
-    from ibis_flink_example_spark.schema import schema as mk_schema
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
 
-    stage = scratch_dir("minhash_neardup_replay", sf_dir)
-    for f in os.listdir(stage):
-        os.remove(os.path.join(stage, f))
-    tbl = pq.read_table(
-        table_path(sf_dir, "documents"), columns=["doc_id", "text"]
-    )
-    arr = pc.cast(
-        pc.bit_wise_and(tbl.column("doc_id"), pa.scalar(3, pa.int64())),
-        pa.int32(),
-    )
-    tbl = tbl.append_column("arrival_batch", arr)
-    base = time.time() - 3600
-    for k in range(4):
-        part = tbl.filter(
-            pc.equal(tbl.column("arrival_batch"), pa.scalar(k, pa.int32()))
-        )
-        p = os.path.join(stage, f"batch_{k}.parquet")
-        pq.write_table(part, p)
-        os.utime(p, (base + 2 * k, base + 2 * k))
-
-    sch = mk_schema(
-        {"doc_id": "int64", "text": "string", "arrival_batch": "int32"}
-    )
     seen_sh_t = "minhash_ingest_seen_sh"
     seen_bd_t = "minhash_ingest_seen_bands"
-    for t in (seen_sh_t, seen_bd_t):
-        drop_table_and_location(spark, t)
-    # legacy tables from older layouts of this query: sizes ride the band
-    # rows via carry_count (r13), accepted flags ride the band rows too
-    # (r15) — dropped so a stale copy never shadows
-    drop_table_and_location(spark, "minhash_ingest_seen_sizes")
-    drop_table_and_location(spark, "minhash_ingest_results")
-
     # Built ONCE, reused by every micro-batch: word_shingles carries a
     # higher-order transform lambda, and a per-batch reconstruction mints
     # fresh lambda-variable ids that defeat the plan/codegen caches
-    # (~1 s of driver recompilation per batch — the r14 hoist, measured
-    # on the semdedup sibling).
+    # (~1 s of driver recompilation per batch, measured on the semdedup
+    # sibling).
     sh_expr = F.explode(word_shingles(words("text"), 3)).alias("shingle")
 
-    state = {"last_bid": None, "last_arr": -1, "bd_seen": False, "rows": 0}
-
-    def apply(bdf, bid):
-        if state["last_bid"] is not None and bid <= state["last_bid"]:
-            return
+    def step(bdf, ctx):
         sess = bdf.sparkSession
-        # STATE-TABLE-FIRST batching (r12 VERDICT #2 trim): each derived
-        # frame lands DIRECTLY in the bucketed state table the batch had
-        # to append anyway, then every consumer re-reads it
-        # pre-partitioned — replacing the former two eager
-        # localCheckpoints, three state unions and the separate doc-sizes
-        # table with the two writes alone. Per-doc shingle counts ride
-        # the band rows (carry_count — the #2a fold), so exact-Jaccard
-        # verification reads both sizes off the candidate join. Appends
-        # are REPARTITIONED onto the bucket key first: a bucketed write
-        # otherwise emits tasks x buckets files per batch (measured 2.5x
-        # slower on the append AND on every subsequent state read-back).
-        # `arr` is a plain stats-pruned column (each append's files carry
-        # a constant arr min/max, so current-batch reads skip old files
-        # by footer; a PARTITION column would pay a metastore
-        # registration per batch for the same pruning).
+        # STATE-TABLE-FIRST batching: each derived frame lands DIRECTLY in
+        # the bucketed state table the batch has to append anyway, then
+        # every consumer re-reads it pre-partitioned. Per-doc shingle
+        # counts ride the band rows (carry_count), so exact-Jaccard
+        # verification reads both sizes off the candidate join. `arr` is
+        # a plain stats-pruned column (each append's files carry a
+        # constant arr min/max, so current-batch reads skip old files by
+        # footer; a PARTITION column would pay a metastore registration
+        # per batch for the same pruning).
         # 1) shingle STRINGS (not hashes): the md5 signature and the
         #    exact verify both consume them; one pass, bucketed on the
-        #    verify join key
-        # ONE shuffle serves both the per-batch (doc_id, shingle) dedup
-        # and the bucket alignment: hashpartitioning(shingle, 8)
-        # satisfies the distinct's ClusteredDistribution (its expression
-        # set is a subset of the grouping keys), so dropDuplicates AFTER
-        # the repartition runs in-partition instead of adding its own
-        # exchange (the r14 fusion; .distinct() then .repartition() paid
-        # two shuffles per batch for the same result).
-        # The arrival probe is FOLDED into this first append (r15 trim):
-        # `arr` comes from the data itself and an Observation on the same
-        # write job returns min/max/count — the former standalone probe
-        # job (~0.4 s/batch of fixed job-launch cost) disappears. The
-        # disorder guard fires right after the write; on violation the
-        # run dies with its scratch tables, so a disordered append never
-        # reaches a consumer.
-        obs = Observation()
-        bdf.observe(
-            obs,
-            F.min("arrival_batch").alias("lo"),
-            F.max("arrival_batch").alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-        ).select(
+        #    verify join key. ONE shuffle serves both the per-batch
+        #    (doc_id, shingle) dedup and the bucket alignment:
+        #    hashpartitioning(shingle, 4) satisfies the distinct's
+        #    ClusteredDistribution, so dropDuplicates AFTER the
+        #    repartition runs in-partition instead of adding its own
+        #    exchange. The arrival census is FOLDED into this write job
+        #    (no probe job of its own); the order check fires right after
+        #    the write, and on violation the run dies with its scratch
+        #    tables, so a disordered append never reaches a consumer.
+        ctx.observe(bdf).select(
             "doc_id",
             sh_expr,
             F.col("arrival_batch").cast("int").alias("arr"),
-        ).repartition(_STATE_PARTS, F.col("shingle")).dropDuplicates(
+        ).repartition(STATE_PARTS, F.col("shingle")).dropDuplicates(
             ["doc_id", "shingle"]
-        ).write.mode("append").bucketBy(_STATE_PARTS, "shingle").sortBy(
+        ).write.mode("append").bucketBy(STATE_PARTS, "shingle").sortBy(
             "shingle"
         ).saveAsTable(seen_sh_t)
-        og = obs.get
-        if og["n"] == 0:
-            state["last_bid"] = bid
+        arrival = ctx.observed()
+        if arrival is None:
             return
-        if og["lo"] != og["hi"] or int(og["lo"]) <= state["last_arr"]:
-            raise RuntimeError(
-                f"minhash ingest: replay disorder — arrival tags "
-                f"[{og['lo']}, {og['hi']}] after {state['last_arr']}; "
-                "refusing to mis-order the prefix"
-            )
-        arrival = int(og["lo"])
         sh_all = sess.table(seen_sh_t)
         # Per-batch literals are confined to SCAN-level filters (where
         # they drive parquet footer/stats pruning); everywhere else the
         # arrival tag travels as a DATA column (`arr` carried through the
-        # band aggregation, `__arr_n` on the probe side, `arrival_batch`
-        # off bdf) so every post-scan stage's generated code is
-        # byte-identical across batches and the codegen cache serves
-        # batches 1..n (a changing literal recompiled the md5/min-agg and
-        # verify trees every batch — measured ~1.5 s/batch, r15).
+        # band aggregation, `__arr_n` on the probe side) so every
+        # post-scan stage's generated code is byte-identical across
+        # batches and the codegen cache serves batches 1..n (a changing
+        # literal recompiles the md5/min-agg and verify trees every
+        # batch, measured ~1.5 s/batch).
         sh_b = sh_all.filter(F.col("arr") == arrival).select(
             "doc_id", "shingle", "arr"
         )
         # 2) band rows (+ per-doc n_shingles + the carried arrival tag),
         #    derived INLINE and appended only after the verify below, so
-        #    the accepted flag RIDES the band rows (r15 fold, mirroring
-        #    the semdedup sibling's vec-state fold: the former separate
-        #    results table cost a third per-batch commit for per-doc
-        #    rows; every doc owns exactly 8 band rows — word_shingles
-        #    degenerates to the whole text below 3 words, so no doc is
-        #    band-less — and the result relation is a distinct
-        #    projection of the band state). The probe side comes from
-        #    this frame directly (no table read-back needed), and the
-        #    candidate pool is prior state UNION the inline batch rows —
-        #    the same rows the former append-then-rescan produced.
+        #    the accepted flag RIDES the band rows: every doc owns exactly
+        #    8 band rows — word_shingles degenerates to the whole text
+        #    below 3 words, so no doc is band-less — and the result
+        #    relation is a distinct projection of the band state, with no
+        #    results table of its own to commit per batch. The probe side
+        #    comes from this frame directly, and the candidate pool is
+        #    prior state UNION the inline batch rows.
         bd_new = md5_minhash_band_rows(
             sh_b,
             id_col="doc_id",
@@ -1856,35 +1551,27 @@ def streaming_minhash_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
             "band_key",
             F.col("arr").alias("__arr_n"),
         )
-        pool_src = bd_new.select(
+        pool_cols = [
             F.col("doc_id").alias("id_o"),
             F.col("n_shingles").alias("no"),
             "band_idx",
             "band_key",
             "arr",
-        )
-        # Loop-state flag, not a per-batch catalog.tableExists RPC — the
-        # band state's existence is this loop's own doing.
-        if state["bd_seen"]:
-            pool_src = sess.table(seen_bd_t).select(
-                F.col("doc_id").alias("id_o"),
-                F.col("n_shingles").alias("no"),
-                "band_idx",
-                "band_key",
-                "arr",
-            ).unionByName(pool_src)
-        state["rows"] += int(og["n"])
+        ]
+        pool_src = bd_new.select(*pool_cols)
+        if not ctx.first:
+            pool_src = sess.table(seen_bd_t).select(*pool_cols).unionByName(pool_src)
         pool = drop_hot_keys(
             pool_src,
             ["band_idx", "band_key"],
             max_rows_per_key=50_000,
             what="minhash band bucket",
-            lazy=True,  # per-batch caller: zero driver actions (r15)
+            lazy=True,  # per-batch caller: zero driver actions
             lazy_broadcast_hint=True,  # AQE is off in the batch jobs
-            # cumulative corpus bound from the arrival Observations (no
-            # extra action): caps the hinted hot-set cardinality (r16);
-            # 8 band rows per doc
-            expected_rows=state["rows"] * 8,
+            # cumulative corpus bound from the arrival census (no extra
+            # action) caps the hinted hot-set cardinality; 8 band rows
+            # per doc
+            expected_rows=ctx.rows * 8,
         )
         cand = (
             # probe is batch-bounded (8 band rows per arriving doc) —
@@ -1908,14 +1595,15 @@ def streaming_minhash_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
         # left_semi dedups its build side by construction — no distinct
         # needed on the id projections (two aggregations saved per batch)
         # Candidate-derived frames carry explicit BROADCAST hints: the
-        # batch jobs run with AQE off (_ingest_conf), where the static
-        # planner estimates these from their corpus-sized ancestors and
-        # would pick sort-merge semi-joins that re-exchange the bucketed
-        # shingle state by doc id every batch. The hints pin the plan AQE
-        # chose at runtime anyway (candidates are verify-stage-bounded by
-        # the band-bucket cap — the guide §3.2 broadcast-semi-join form),
-        # and the shingle state keeps its bucket partitioning so the
-        # nn ⋈ oo intersection join needs no exchange on the state side.
+        # batch jobs run with AQE off (streaming/ingest.py _ingest_conf),
+        # where the static planner estimates these from their
+        # corpus-sized ancestors and would pick sort-merge semi-joins
+        # that re-exchange the bucketed shingle state by doc id every
+        # batch. The hints pin the plan AQE chooses at runtime anyway
+        # (candidates are verify-stage-bounded by the band-bucket cap —
+        # the guide §3.2 broadcast-semi-join form), and the shingle state
+        # keeps its bucket partitioning so the nn ⋈ oo intersection join
+        # needs no exchange on the state side.
         nn = sh_b.select(F.col("doc_id").alias("id_n"), "shingle").join(
             F.broadcast(cand.select("id_n")), "id_n", "left_semi"
         )
@@ -1941,66 +1629,46 @@ def streaming_minhash_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
         # accepted rides ONE left join straight into the band append
         # (rejected is batch-bounded — ids of the current batch only —
         # so the broadcast hint is the plan AQE would pick at runtime)
-        bd_new.join(
-            F.broadcast(rejected.withColumn("__rej", F.lit(True))),
-            "doc_id",
-            "left",
-        ).select(
-            "doc_id",
-            "n_shingles",
-            "arr",
-            "band_idx",
+        append_bucketed(
+            bd_new.join(
+                F.broadcast(rejected.withColumn("__rej", F.lit(True))),
+                "doc_id",
+                "left",
+            ).select(
+                "doc_id",
+                "n_shingles",
+                "arr",
+                "band_idx",
+                "band_key",
+                F.col("__rej").isNull().alias("accepted"),
+            ),
+            seen_bd_t,
             "band_key",
-            F.col("__rej").isNull().alias("accepted"),
-        ).repartition(
-            _STATE_PARTS, F.col("band_key")
-        ).write.mode("append").bucketBy(_STATE_PARTS, "band_key").sortBy(
-            "band_key"
-        ).saveAsTable(seen_bd_t)
+        )
         # Loop-caller release contract: drop the hot-set checkpoint
-        # blocks drop_hot_keys pinned for this batch (ADVICE r14), and
-        # the batch-scoped persists with them.
+        # blocks drop_hot_keys pinned for this batch, and the
+        # batch-scoped persists with them.
         release_eager_checkpoints(pool)
         bd_new.unpersist()
         cand.unpersist()
-        state["bd_seen"] = True
-        state["last_bid"] = bid
-        state["last_arr"] = arrival
 
-    sess_stream = _docs_stream_session(spark)
-    _ingest_conf(sess_stream, approx_batch_bytes=_max_file_bytes(stage))
-    stream = (
-        sess_stream.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    replay_ingest(
+        spark,
+        sf_dir,
+        "minhash_neardup_replay",
+        source="documents",
+        columns=("doc_id", "text"),
+        tables=(seen_sh_t, seen_bd_t),
+        step=step,
     )
-    q = foreach_batch(stream, apply, available_now=True)
-    q.awaitTermination()
-    if state["last_bid"] is None:
-        return spark.createDataFrame(
-            [], "doc_id long, batch_id long, accepted boolean"
-        )
-    # Results ride the band state (r15 fold): every doc owns exactly 8
-    # band rows stamped with the same (arr, accepted), so the distinct
-    # projection IS the one-row-per-doc result relation.
+    # Results ride the band state: every doc owns exactly 8 band rows
+    # stamped with the same (arr, accepted), so the distinct projection
+    # IS the one-row-per-doc result relation.
     return (
         spark.table(seen_bd_t)
-        .select(
-            "doc_id",
-            F.col("arr").cast("long").alias("batch_id"),
-            "accepted",
-        )
+        .select("doc_id", F.col("arr").cast("long").alias("batch_id"), "accepted")
         .distinct()
     )
-
-
-def _docs_stream_session(spark: SparkSession):
-    """Documents-replay twin of ``_events_stream``'s session discipline: a
-    conf-isolated clone carrying the bounded-run state partitioning (no
-    timestamp decode flags needed — the documents fixture has none)."""
-    from ibis_flink_example_spark.streaming.runtime import state_scoped_session
-
-    return state_scoped_session(spark, _STATE_PARTS)
 
 
 @query(
@@ -2018,110 +1686,69 @@ FROM events GROUP BY 1
 """,
 )
 def streaming_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T5 upgraded from docstring caveat to DEFAULT sink semantics
-    (VERDICT r10 'What's missing' #2): the warehouse sink as per-batch
+    """T5 as DEFAULT sink semantics: the warehouse sink as per-batch
     static-partition INSERT OVERWRITE
     (streaming/runtime.py:idempotent_partition_overwrite) — each
     micro-batch lands in its own partition keyed by an in-data arrival
     tag (event_id & 3, four mtime-ordered replay files), so re-delivery
     REPLACES the partition instead of appending a duplicate. The query
     PROVES the property, not just claims it: after the drained
-    availableNow run it re-invokes the sink on a re-read of arrival
-    file 1 — exactly the at-least-once replay a restart produces, with
-    NO in-memory guard to hide behind (the guard is what a restart
-    loses) — and returns the re-read table's per-type totals; any
-    duplication fails the value-hash against the pure batch oracle.
-    Scale shape: the sink write is one partition-pruned file commit per
-    batch; the only driver-side collect is the <= 4-value arrival-tag
-    distinct (the streaming_neardup_ingest whitelist shape)."""
+    availableNow run it re-invokes the raw sink step on a re-read of
+    arrival file 1 — exactly the at-least-once replay a restart
+    produces, with a fresh context and NO re-delivery guard to hide
+    behind (the guard is what a restart loses) — and returns the
+    re-read table's per-type totals; any duplication fails the
+    value-hash against the pure batch oracle. Scale shape: the sink
+    write is one partition-pruned file commit per batch; the only
+    driver-side collect is the one-row arrival census."""
     import os
-    import time
 
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ibis_flink_example_spark.catalog import (
-        drop_table_and_location,
-        scratch_dir,
-        table_path,
-    )
+    from ibis_flink_example_spark.catalog import drop_table_and_location
     from ibis_flink_example_spark.functions.exact import money
-    from ibis_flink_example_spark.schema import schema as mk_schema
     from ibis_flink_example_spark.streaming.runtime import (
-        foreach_batch,
         idempotent_partition_overwrite,
     )
 
-    stage = scratch_dir("exactly_once_replay", sf_dir)
-    for f in os.listdir(stage):
-        os.remove(os.path.join(stage, f))
-    tbl = pq.read_table(
-        table_path(sf_dir, "events"), columns=["event_id", "event_type", "value"]
-    )
-    arr = pc.cast(
-        pc.bit_wise_and(tbl.column("event_id"), pa.scalar(3, pa.int64())),
-        pa.int32(),
-    )
-    tbl = tbl.append_column("arrival", arr)
-    base = time.time() - 3600
-    for k in range(4):
-        part = tbl.filter(pc.equal(tbl.column("arrival"), pa.scalar(k, pa.int32())))
-        p = os.path.join(stage, f"batch_{k}.parquet")
-        pq.write_table(part, p)
-        os.utime(p, (base + 2 * k, base + 2 * k))
-
     sink_t = "exactly_once_sink_events"
+    # declared, not appended into, so the sink is dropped and created here
     drop_table_and_location(spark, sink_t)
     spark.sql(
         f"""CREATE TABLE {sink_t}
         (event_id BIGINT, event_type STRING, value DOUBLE)
-        USING parquet PARTITIONED BY (arrival INT)"""
+        USING parquet PARTITIONED BY (arrival_batch INT)"""
     )
 
-    def apply(bdf, bid):
+    def step(bdf, ctx):
         # one file per trigger -> one arrival tag per batch; the tag IS
-        # the delivery unit, so assert that identity (bounded collect:
-        # <= 4 distinct values) — but NO monotonic-bid guard: idempotence
-        # must come from the overwrite alone, because the in-memory guard
-        # is precisely what the restart that causes re-delivery loses.
-        tags = _arrival_tags(bdf, "arrival")
-        if not tags:
-            return
-        if len(tags) != 1:
-            raise RuntimeError(
-                f"exactly-once sink: batch {bid} carries arrival tags "
-                f"{sorted(tags)} (maxFilesPerTrigger/mtime staging violated)"
+        # the delivery unit and names the partition the batch overwrites,
+        # so it must be known before the write: one pre-write census
+        arrival = ctx.probe(bdf)
+        if arrival is not None:
+            idempotent_partition_overwrite(
+                bdf.drop("arrival_batch"), sink_t, "arrival_batch", arrival
             )
-        idempotent_partition_overwrite(
-            bdf.drop("arrival"), sink_t, "arrival", int(tags[0])
-        )
 
-    sch = mk_schema(
-        {
-            "event_id": "int64",
-            "event_type": "string",
-            "value": "float64",
-            "arrival": "int32",
-        }
+    ctx = replay_ingest(
+        spark,
+        sf_dir,
+        "exactly_once_replay",
+        source="events",
+        columns=("event_id", "event_type", "value"),
+        step=step,
     )
-    stream = (
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(stage)
-    )
-    q = foreach_batch(stream, apply, available_now=True)
-    q.awaitTermination()
     # Forced at-least-once replay: re-deliver arrival file 1 verbatim
-    # (same rows, same partition) through the same sink path. With an
-    # append sink this doubles partition 1; with the overwrite sink the
-    # table is byte-identical — which the oracle hash then certifies.
-    apply(spark.read.parquet(os.path.join(stage, "batch_1.parquet")), bid=1)
+    # (same rows, same partition) through the raw step with a fresh
+    # context, as a restarted process would. With an append sink this
+    # doubles partition 1; with the overwrite sink the table is
+    # byte-identical — which the oracle hash then certifies.
+    step(spark.read.parquet(os.path.join(ctx.stage, "batch_1.parquet")), IngestContext())
     return (
         spark.table(sink_t)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.sum(money("value")).cast("double").alias("sum_value"),
-            F.countDistinct("arrival").cast("long").alias("n_batches"),
+            F.countDistinct("arrival_batch").cast("long").alias("n_batches"),
         )
     )
 
@@ -2209,45 +1836,9 @@ def streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming ANN-SemDeDup ingest (r14): embedding batches vs persistent
+# Streaming ANN-SemDeDup ingest: embedding batches vs persistent
 # multitable-LSH bucket state
 # ---------------------------------------------------------------------------
-
-
-def _stage_embedding_arrivals(sf_dir: str, name: str) -> str:
-    """Stage the embeddings table as 4 mtime-ordered arrival files
-    (vec_id % 4, the fixed deterministic batching every embedding-ingest
-    oracle mirrors); returns the staging directory for a
-    maxFilesPerTrigger=1 file-stream replay."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ibis_flink_example_spark.catalog import scratch_dir, table_path
-
-    stage = scratch_dir(name, sf_dir)
-    for f in os.listdir(stage):
-        os.remove(os.path.join(stage, f))
-    tbl = pq.read_table(
-        table_path(sf_dir, "embeddings"), columns=["vec_id", "embedding"]
-    )
-    arr_col = pc.cast(
-        pc.bit_wise_and(tbl.column("vec_id"), pa.scalar(3, pa.int64())),
-        pa.int32(),
-    )
-    tbl = tbl.append_column("arrival_batch", arr_col)
-    base_ts = time.time() - 3600
-    for k in range(4):
-        part = tbl.filter(
-            pc.equal(tbl.column("arrival_batch"), pa.scalar(k, pa.int32()))
-        )
-        p = os.path.join(stage, f"batch_{k}.parquet")
-        pq.write_table(part, p)
-        os.utime(p, (base_ts + 2 * k, base_ts + 2 * k))
-    return stage
 
 
 def _semdedup_ingest_oracle() -> str:
@@ -2288,9 +1879,9 @@ FROM arr a LEFT JOIN rejected r ON r.vec_id = a.vec_id
 
 @query("streaming_semdedup_ingest", oracle=_semdedup_ingest_oracle())
 def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental ANN-backed SemDeDup (VERDICT r13 #3): the streaming
-    arm of semdedup_lsh, built on the bucketed append-only state shape
-    of streaming_minhash_neardup_ingest. Embedding batches arrive (4
+    """Incremental ANN-backed SemDeDup: the streaming arm of
+    semdedup_lsh, built on the bucketed append-only state shape of
+    streaming_minhash_neardup_ingest. Embedding batches arrive (4
     deterministic arrival batches, vec_id % 4, mtime-ordered file
     replay); per batch the L=6-table x 6-plane hyperplane signatures
     (driver-side literal planes — no training pass) land DIRECTLY in a
@@ -2300,14 +1891,12 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket state (arr < batch, or same batch with smaller id); ONLY the
     surviving candidate pairs are verified at exact cos6 >= 350000
     against the vec state. State only APPENDs; appends are
-    bucket-ALIGNED (repartition on the bucket key first); per-batch
-    re-delivery and arrival-order guards as the minhash sibling. Since
-    r15 the accepted flag RIDES the vec-state rows (verify runs before
-    the vec append, current-batch vectors served by a map-only
-    recompute), so a batch owes TWO commits, not three, and the result
-    relation is a projection of the vec state. Returns one row per
-    vector: (vec_id, batch_id, accepted)."""
-    from ibis_flink_example_spark.catalog import drop_table_and_location
+    bucket-ALIGNED (repartition on the bucket key first); same replay
+    harness as the minhash sibling. The accepted flag RIDES the
+    vec-state rows (verify runs before the vec append, current-batch
+    vectors served by a map-only recompute), so a batch owes TWO
+    commits, not three, and the result relation is a projection of the
+    vec state. Returns one row per vector: (vec_id, batch_id, accepted)."""
     from ibis_flink_example_spark.operators.dedup import drop_hot_keys
     from ibis_flink_example_spark.operators.similarity import (
         dot,
@@ -2315,22 +1904,14 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         multitable_signature_structs,
         random_hyperplanes,
     )
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
 
     n_tables, n_planes, dim, thr = 6, 6, 64, 350_000
     tables = [
         random_hyperplanes(dim, n_planes, 42 + 1000 * t)
         for t in range(n_tables)
     ]
-
-    stage = _stage_embedding_arrivals(sf_dir, "semdedup_ingest_replay")
-
     bkt_t = "semdedup_ingest_buckets"
     vec_t = "semdedup_ingest_vecs"
-    # semdedup_ingest_results is the pre-r15 layout (accepted flags now
-    # ride the vec state rows); dropped so a stale copy never shadows
-    for t in ("semdedup_ingest_results", bkt_t, vec_t):
-        drop_table_and_location(spark, t)
 
     # Lambda-bearing expressions (higher-order zip_with/aggregate folds
     # inside hyperplane_signature / l2_norm / dot and the transform cast)
@@ -2341,7 +1922,7 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the identical Column object runs the same stage in ~0.6 s).
     # One plane-matrix literal + nested fold instead of L x p unrolled
     # fold trees: bit-identical signatures, ~0.2 s less Catalyst
-    # analysis/optimization per micro-batch plan build (r15 — see
+    # analysis/optimization per micro-batch plan build (see
     # multitable_signature_structs).
     sig_expr = F.explode(
         multitable_signature_structs(F.col("embedding"), tables)
@@ -2361,28 +1942,16 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("__cos6")
     )
 
-    state = {"last_bid": None, "last_arr": -1, "vec_seen": False, "rows": 0}
-
-    def apply(bdf, bid):
-        if state["last_bid"] is not None and bid <= state["last_bid"]:
-            return
+    def step(bdf, ctx):
         sess = bdf.sparkSession
-        # Signature rows derived INLINE and persisted (r16, the minhash
-        # sibling's bd_new idiom brought over): ONE hyperplane-signature
-        # pass feeds the bucket append, the probe AND the candidate
-        # pool's inline side — the pre-r16 shape computed the signatures
-        # once but then re-READ the just-written state table for both
-        # probe and pool, serializing the whole verify behind the bucket
-        # append's commit + re-scan. Batch-bounded (L rows per arriving
-        # vector), explicitly unpersisted below.
-        obs = Observation()
+        # Signature rows derived INLINE and persisted: ONE
+        # hyperplane-signature pass feeds the bucket append, the probe
+        # AND the candidate pool's inline side, so the verify does not
+        # wait on the bucket append's commit and a re-scan of it.
+        # Batch-bounded (L rows per arriving vector), explicitly
+        # unpersisted below.
         sg_new = (
-            bdf.observe(
-                obs,
-                F.min("arrival_batch").alias("lo"),
-                F.max("arrival_batch").alias("hi"),
-                F.count(F.lit(1)).alias("n"),
-            )
+            ctx.observe(bdf)
             .select(
                 "vec_id",
                 sig_expr,
@@ -2397,29 +1966,18 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         # 1) bucket state: L (t, b) signature rows per vector, bucketed
-        #    and bucket-ALIGNED on b. The arrival probe is FOLDED into
-        #    this append (r15 trim): arr comes from the data, the
-        #    Observation rides the same write job (which also populates
-        #    the sg_new cache), and the disorder guard fires right after.
-        sg_new.repartition(_STATE_PARTS, F.col("b")).write.mode(
-            "append"
-        ).bucketBy(_STATE_PARTS, "b").sortBy("b").saveAsTable(bkt_t)
-        og = obs.get
-        if og["n"] == 0:
+        #    and bucket-ALIGNED on b. The arrival census is FOLDED into
+        #    this append: arr comes from the data, the observation rides
+        #    the same write job (which also populates the sg_new cache),
+        #    and the order check fires right after.
+        append_bucketed(sg_new, bkt_t, "b")
+        arrival = ctx.observed()
+        if arrival is None:
             sg_new.unpersist()
-            state["last_bid"] = bid
             return
-        if og["lo"] != og["hi"] or int(og["lo"]) <= state["last_arr"]:
-            raise RuntimeError(
-                f"semdedup ingest: replay disorder — arrival tags "
-                f"[{og['lo']}, {og['hi']}] after {state['last_arr']}; "
-                "refusing to mis-order the prefix"
-            )
-        arrival = int(og["lo"])
-        # Batch-bounded vector frame, persisted (r16): vec + norm are
-        # recomputed from the batch file ONCE and serve the verify's new
-        # side (va), the first-batch old side (vb) and the flag-carrying
-        # vec append — the pre-r16 shape re-derived them per consumer.
+        # Batch-bounded vector frame, persisted: vec + norm are computed
+        # from the batch file ONCE and serve the verify's new side (va),
+        # the first-batch old side (vb) and the flag-carrying vec append.
         vec_new = (
             bdf.select(
                 "vec_id",
@@ -2429,11 +1987,11 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # Probe comes from the inline signature frame (r16 — the minhash
-        # idiom): no state read-back, no per-batch scan filter; the
-        # arrival tag travels as the carried `__arr_n` DATA column so the
-        # probe/candidate stages' generated code is byte-identical across
-        # batches and the codegen cache serves batches 1..n.
+        # Probe comes from the inline signature frame: no state
+        # read-back, no per-batch scan filter; the arrival tag travels as
+        # the carried `__arr_n` DATA column so the probe/candidate
+        # stages' generated code is byte-identical across batches and
+        # the codegen cache serves batches 1..n.
         probe = sg_new.select(
             F.col("vec_id").alias("id_n"),
             "t",
@@ -2448,32 +2006,30 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("b"),
             F.col("arr").alias("__arr_n"),
         )
-        # Candidate pool = prior state UNION the inline batch rows — the
-        # same relation the former post-append table scan produced (this
+        # Candidate pool = prior state UNION the inline batch rows (this
         # batch's own append carries arr == arrival; the scan filter
         # excludes exactly those rows, the cached inline side re-adds
         # them without re-reading the files it just wrote).
         pool_src = sg_new.select(
             F.col("vec_id").alias("id_o"), "t", "b", "arr"
         )
-        if state["vec_seen"]:
+        if not ctx.first:
             pool_src = (
                 sess.table(bkt_t)
                 .filter(F.col("arr") < arrival)
                 .select(F.col("vec_id").alias("id_o"), "t", "b", "arr")
                 .unionByName(pool_src)
             )
-        state["rows"] += int(og["n"])
         pool = drop_hot_keys(
             pool_src,
             ["t", "b"],
             max_rows_per_key=50_000,
             what="semdedup ingest bucket",
-            lazy=True,  # per-batch caller: zero driver actions (r15)
+            lazy=True,  # per-batch caller: zero driver actions
             lazy_broadcast_hint=True,  # AQE is off in the batch jobs
-            # cumulative corpus bound from the arrival Observations (no
-            # extra action): caps the hinted hot-set cardinality (r16)
-            expected_rows=state["rows"] * n_tables,
+            # cumulative corpus bound from the arrival census (no extra
+            # action) caps the hinted hot-set cardinality
+            expected_rows=ctx.rows * n_tables,
         )
         cand = (
             probe.join(pool, ["t", "b"])
@@ -2488,41 +2044,35 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         # 2) exact cos6 verify, then ONE vec-state append that carries
-        #    the accepted flag (r15 fold: 3 commits/batch -> 2). The
-        #    current batch's vectors come from the cached vec_new frame;
-        #    the OLD side still reads the bucketed state pre-partitioned.
+        #    the accepted flag. The current batch's vectors come from the
+        #    cached vec_new frame; the OLD side still reads the bucketed
+        #    state pre-partitioned.
         va = vec_new.select(
             F.col("vec_id").alias("id_n"),
             F.col("vec").alias("__vn"),
             F.col("nrm").alias("__nn"),
         )
-        vb = vec_new.select(
+        vb_cols = [
             F.col("vec_id").alias("id_o"),
             F.col("vec").alias("__vo"),
             F.col("nrm").alias("__no"),
-        )
-        if state["vec_seen"]:
+        ]
+        vb = vec_new.select(*vb_cols)
+        if not ctx.first:
             # prior batches' vectors come pre-bucketed from the state
-            # table; the first processed batch has no table yet (its
-            # first append is the flag-carrying one below). The flag is
-            # loop state, not a per-batch catalog.tableExists RPC — the
-            # table's existence is this loop's own doing.
-            vb = sess.table(vec_t).select(
-                F.col("vec_id").alias("id_o"),
-                F.col("vec").alias("__vo"),
-                F.col("nrm").alias("__no"),
-            ).unionByName(vb)
+            # table; the first batch has no table yet (its first append
+            # is the flag-carrying one below)
+            vb = sess.table(vec_t).select(*vb_cols).unionByName(vb)
         # Candidate side BROADCAST-hinted into the corpus-sized vec state
-        # (AQE off in the batch jobs — _ingest_conf): the candidates and
-        # the batch's own vectors are verify-stage-bounded, so hinting
-        # them keeps the state side map-only (scanned pre-bucketed, never
-        # exchanged per batch) — the direction that survives corpus
-        # growth, and the plan AQE picked at runtime anyway. The join is
-        # FLAT (r16): cand broadcasts into the state-sized vb, then the
-        # bounded result picks up the new side from broadcast va — the
-        # former nested form broadcast (cand JOIN broadcast va) as one
-        # build, which serialized two broadcast builds; va's build is now
-        # independent of cand's and overlaps it.
+        # (AQE off in the batch jobs): the candidates and the batch's own
+        # vectors are verify-stage-bounded, so hinting them keeps the
+        # state side map-only (scanned pre-bucketed, never exchanged per
+        # batch) — the direction that survives corpus growth, and the
+        # plan AQE picks at runtime anyway. The join is FLAT: cand
+        # broadcasts into the state-sized vb, then the bounded result
+        # picks up the new side from broadcast va, so va's broadcast
+        # build is independent of cand's and overlaps it instead of
+        # serializing behind it.
         rejected = (
             F.broadcast(cand)
             .join(vb, "id_o")
@@ -2534,56 +2084,48 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # accepted rides ONE left join straight into the vec append; the
         # arrival tag comes off the cached data, not a per-batch literal.
-        vec_new.join(
-            # rejected is batch-bounded (ids of the current batch only);
-            # broadcast-hinted because the batch jobs run with AQE off
-            F.broadcast(rejected.withColumn("__rej", F.lit(True))),
+        append_bucketed(
+            vec_new.join(
+                # rejected is batch-bounded (ids of the current batch
+                # only); broadcast-hinted because AQE is off
+                F.broadcast(rejected.withColumn("__rej", F.lit(True))),
+                "vec_id",
+                "left",
+            ).select(
+                "vec_id",
+                "vec",
+                "nrm",
+                F.col("__rej").isNull().alias("accepted"),
+                "arr",
+            ),
+            vec_t,
             "vec_id",
-            "left",
-        ).select(
-            "vec_id",
-            "vec",
-            "nrm",
-            F.col("__rej").isNull().alias("accepted"),
-            "arr",
-        ).repartition(_STATE_PARTS, F.col("vec_id")).write.mode(
-            "append"
-        ).bucketBy(_STATE_PARTS, "vec_id").sortBy("vec_id").saveAsTable(
-            vec_t
         )
         # Loop-caller release contract: drop the hot-set checkpoint
-        # blocks drop_hot_keys pinned for this batch (ADVICE r14), and
-        # the batch-scoped persists with them.
+        # blocks drop_hot_keys pinned for this batch, and the
+        # batch-scoped persists with them.
         release_eager_checkpoints(pool)
         sg_new.unpersist()
         vec_new.unpersist()
-        state["vec_seen"] = True
-        state["last_bid"] = bid
-        state["last_arr"] = arrival
 
-    sch = spark.read.parquet(stage).schema
-    sess_stream = _docs_stream_session(spark)
-    _ingest_conf(sess_stream, approx_batch_bytes=_max_file_bytes(stage))
-    stream = (
-        sess_stream.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    replay_ingest(
+        spark,
+        sf_dir,
+        "semdedup_ingest_replay",
+        source="embeddings",
+        columns=("vec_id", "embedding"),
+        tables=(bkt_t, vec_t),
+        step=step,
     )
-    q = foreach_batch(stream, apply, available_now=True)
-    q.awaitTermination()
-    if state["last_bid"] is None:
-        return spark.createDataFrame(
-            [], "vec_id long, batch_id long, accepted boolean"
-        )
-    # Results ride the vec state (r15 fold): one row per vector with its
-    # arrival and accepted flag IS the result relation.
+    # Results ride the vec state: one row per vector with its arrival and
+    # accepted flag IS the result relation.
     return spark.table(vec_t).select(
         "vec_id", F.col("arr").cast("long").alias("batch_id"), "accepted"
     )
 
 
 # ---------------------------------------------------------------------------
-# Streaming mini-batch k-means ingest (r14): the clustering family's
+# Streaming mini-batch k-means ingest: the clustering family's
 # incremental arm
 # ---------------------------------------------------------------------------
 
@@ -2657,8 +2199,8 @@ FROM (
 @query("streaming_kmeans_ingest", oracle=_minibatch_kmeans_oracle())
 def streaming_kmeans_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MINI-BATCH k-means (the clustering family's streaming
-    arm, completing the r14 tier the way streaming_semdedup_ingest
-    completes the semantic-dedup family): embedding batches arrive on
+    arm, the way streaming_semdedup_ingest is the semantic-dedup
+    family's): embedding batches arrive on
     the shared vec_id % 4 replay; batch 0's k smallest vec_ids seed the
     centroids at weight 0; each batch assigns its vectors against the
     CURRENT driver-held integer centroids (the broadcast-Lloyd
@@ -2679,42 +2221,27 @@ def streaming_kmeans_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Weighted-mean overflow posture: m*n stays under 2^63 to n ~ 1e12
     vectors per cluster; past that, rescale n (decayed counts — the
     standard mini-batch forgetting dial) before the fold."""
-    from ibis_flink_example_spark.catalog import drop_table_and_location
     from ibis_flink_example_spark.operators.clustering import (
         _trunc_div,
         encoded_argmin,
         quantize_micro,
     )
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
 
     k = _MBK_K
     dim = 64
-    stage = _stage_embedding_arrivals(sf_dir, "kmeans_ingest_replay")
     res_t = "kmeans_ingest_results"
-    drop_table_and_location(spark, res_t)
+    state = {"cents": None, "counts": None}
 
-    state = {"last_bid": None, "last_arr": -1, "cents": None, "counts": None}
-
-    def apply(bdf, bid):
-        if state["last_bid"] is not None and bid <= state["last_bid"]:
+    def step(bdf, ctx):
+        if ctx.probe(bdf) is None:
             return
-        arrs = _arrival_tags(bdf)
-        if not arrs:
-            state["last_bid"] = bid
-            return
-        if len(arrs) != 1 or arrs[0] <= state["last_arr"]:
-            raise RuntimeError(
-                f"kmeans ingest: replay disorder — arrival tags {arrs} "
-                f"after {state['last_arr']}; refusing to mis-order the prefix"
-            )
-        arrival = int(arrs[0])
         base = quantize_micro(
             bdf,
             id_col="vec_id",
             vec_col="embedding",
             carry_cols=("arrival_batch",),
         )
-        if state["cents"] is None:
+        if ctx.first:
             seed_rows = base.orderBy(F.col("vec_id")).limit(k).collect()
             if len(seed_rows) < k:
                 raise RuntimeError("kmeans ingest: batch 0 smaller than k")
@@ -2725,7 +2252,7 @@ def streaming_kmeans_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # folded constant rides codegen's references array, so the
         # compiled class is reused across batches even as the centroid
         # values evolve, and Catalyst analyzes ONE tree per batch
-        # instead of k unrolled fold trees (r15).
+        # instead of k unrolled fold trees.
         enc = encoded_argmin(F.col("__mv"), cents, k)
         # No checkpoint: the two consumers below re-plan the same scan,
         # but they share the ONE `enc` Column object, so analysis and
@@ -2744,9 +2271,9 @@ def streaming_kmeans_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("append").saveAsTable(res_t)
         # Element-wise centroid sums via posexplode + ONE analyzed agg
         # expression per batch, not dim+1 separate agg columns (~0.5 s of
-        # Catalyst analysis per batch at dim=64 — r15, the kmeans_assign
-        # treatment). Map-side partials still reduce each partition to
-        # k x dim rows; the collect stays bounded at k x dim rows.
+        # Catalyst analysis per batch at dim=64). Map-side partials still
+        # reduce each partition to k x dim rows; the collect stays
+        # bounded at k x dim rows.
         sums = (
             assigned.select((F.col("__enc") % k).alias("__cid"), "__mv")
             .select("__cid", F.posexplode("__mv").alias("__d", "__v"))
@@ -2776,23 +2303,14 @@ def streaming_kmeans_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             new_counts[cid] = n_old + cnt
         state["cents"] = new_cents
         state["counts"] = new_counts
-        state["last_bid"] = bid
-        state["last_arr"] = arrival
 
-    sch = spark.read.parquet(stage).schema
-    sess_stream = _docs_stream_session(spark)
-    _ingest_conf(sess_stream, approx_batch_bytes=_max_file_bytes(stage))
-    stream = (
-        sess_stream.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    replay_ingest(
+        spark,
+        sf_dir,
+        "kmeans_ingest_replay",
+        source="embeddings",
+        columns=("vec_id", "embedding"),
+        tables=(res_t,),
+        step=step,
     )
-    q = foreach_batch(stream, apply, available_now=True)
-    q.awaitTermination()
-    if state["last_bid"] is None:
-        return spark.createDataFrame(
-            [], "vec_id long, batch_id long, cluster_id long, dist_micro2 long"
-        )
-    return spark.table(res_t).select(
-        "vec_id", "batch_id", "cluster_id", "dist_micro2"
-    )
+    return spark.table(res_t).select("vec_id", "batch_id", "cluster_id", "dist_micro2")

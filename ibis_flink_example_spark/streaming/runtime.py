@@ -10,6 +10,7 @@ than 15 s later than the max event-time seen — Spark's
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 
@@ -94,17 +95,20 @@ def run_available_now(
     small for bounded verification runs), not inherited from the relational
     shuffle setting. Implemented by scoping ``spark.sql.shuffle.partitions``
     around the query's start; the session value is restored afterwards.
+
+    Without ``checkpoint`` the run mints a fresh checkpoint directory and
+    removes it once the drained query has terminated (the results live in
+    the memory sink); a caller-supplied checkpoint is never touched.
     """
     name = query_name or f"mem_{uuid.uuid4().hex[:12]}"
     spark = df.sparkSession
+    minted = None if checkpoint else tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     writer = (
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
-    )
-    writer = writer.option(
-        "checkpointLocation", checkpoint or tempfile.mkdtemp(prefix=f"ckpt_{name}_")
+        .option("checkpointLocation", checkpoint or minted)
     )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
@@ -115,6 +119,8 @@ def run_available_now(
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if minted is not None:
+            shutil.rmtree(minted, ignore_errors=True)
     return spark.table(name)
 
 

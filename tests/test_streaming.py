@@ -996,37 +996,82 @@ def test_idempotent_partition_overwrite_survives_redelivery(spark):
 
 
 def test_ingest_aqe_dial_is_size_aware(spark):
-    """_ingest_conf sizes AQE to the micro-batch (VERDICT r15 #5): tiny
-    batches run static plans (AQE's per-exchange replan rounds are pure
-    fixed latency there, r15 measured 34->15 s on the semdedup replay);
-    cluster-sized batches keep AQE's coalescing/skew-split. The env dial
-    force-overrides both regimes."""
-    import os
-
-    from ibis_flink_example_spark.queries_streaming import (
+    """_ingest_conf sizes AQE to the micro-batch: tiny batches run static
+    plans (AQE's per-exchange replan rounds are pure fixed latency there,
+    measured 34->15 s on the semdedup replay); cluster-sized batches keep
+    AQE's coalescing/skew-split."""
+    from ibis_flink_example_spark.streaming.ingest import (
         _INGEST_AQE_MIN_BATCH_BYTES,
         _ingest_conf,
     )
 
-    assert os.environ.get("SPARK_GRAFT_INGEST_AQE") is None, (
-        "test needs the env dial unset"
-    )
     clone = spark.newSession()
-    # small batch (and the no-information default): static plans
+    # small batch: static plans
     _ingest_conf(clone, approx_batch_bytes=1024)
-    assert clone.conf.get("spark.sql.adaptive.enabled") == "false"
-    _ingest_conf(clone)
     assert clone.conf.get("spark.sql.adaptive.enabled") == "false"
     # cluster-sized batch: AQE stays on
     _ingest_conf(clone, approx_batch_bytes=_INGEST_AQE_MIN_BATCH_BYTES)
     assert clone.conf.get("spark.sql.adaptive.enabled") == "true"
-    # env force-override wins in both directions
-    os.environ["SPARK_GRAFT_INGEST_AQE"] = "0"
-    try:
-        _ingest_conf(clone, approx_batch_bytes=_INGEST_AQE_MIN_BATCH_BYTES)
-        assert clone.conf.get("spark.sql.adaptive.enabled") == "false"
-        os.environ["SPARK_GRAFT_INGEST_AQE"] = "1"
-        _ingest_conf(clone, approx_batch_bytes=0)
-        assert clone.conf.get("spark.sql.adaptive.enabled") == "true"
-    finally:
-        del os.environ["SPARK_GRAFT_INGEST_AQE"]
+
+
+def test_drained_runs_leave_no_checkpoint_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """A replay ingest and an availableNow memory-sink run each mint a
+    fresh checkpoint directory and remove it once the drained query has
+    terminated, so repeated runs do not pile up ``ckpt_*`` dirs."""
+    from ibis_flink_example_spark.queries import QUERIES
+    from ibis_flink_example_spark.streaming.runtime import run_available_now
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert QUERIES["streaming_exactly_once_sink"](spark, sf_dir).count() > 0
+    src = str(tmp_path / "src")
+    spark.range(5).write.parquet(src)
+    assert run_available_now(spark.readStream.schema("id long").parquet(src)).count() == 5
+    assert not list(tmp_path.glob("ckpt_*"))
+
+
+@pytest.mark.parametrize(
+    "files",
+    [
+        # tag 1's file is older than tag 0's: mtimes invert arrival order
+        pytest.param([[1, 1], [0, 0]], id="mtimes_invert_arrival_order"),
+        pytest.param([[0, 1]], id="two_tags_in_one_file"),
+    ],
+)
+def test_replay_disorder_raises(spark, tmp_path, monkeypatch, files):
+    """The replay harness's arrival-order check refuses a batch whose
+    arrival tags do not follow the ones already applied, or that carries
+    more than one tag, and the step's own error reaches the caller."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ibis_flink_example_spark.streaming import ingest
+
+    stage = tmp_path / "stage"
+    stage.mkdir()
+    base = time.time() - 3600
+    for k, tags in enumerate(files):
+        p = str(stage / f"batch_{k}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "id": pa.array(range(len(tags)), pa.int64()),
+                    "arrival_batch": pa.array(tags, pa.int32()),
+                }
+            ),
+            p,
+        )
+        os.utime(p, (base + 2 * k, base + 2 * k))
+    monkeypatch.setattr(
+        ingest, "_stage", lambda *_: (str(stage), "id long, arrival_batch int")
+    )
+    with pytest.raises(RuntimeError, match="replay disorder"):
+        ingest.replay_ingest(
+            spark,
+            str(tmp_path),
+            "disorder_replay",
+            source="unused",
+            columns=("id",),
+            step=lambda bdf, ctx: ctx.probe(bdf),
+        )

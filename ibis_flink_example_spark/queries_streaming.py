@@ -1349,7 +1349,7 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_bucketed(sizes_b, seen_sz_t, "doc_id")
         _release_local_checkpoint(sh_b)
 
-    replay_ingest(
+    ctx = replay_ingest(
         spark,
         sf_dir,
         "neardup_replay",
@@ -1358,6 +1358,8 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         tables=(res_t, seen_sh_t, seen_sz_t),
         step=step,
     )
+    if ctx.rows == 0:  # no batch carried rows, so no table was written
+        return spark.createDataFrame([], "doc_id BIGINT, batch_id BIGINT, accepted BOOLEAN")
     return spark.table(res_t).select("doc_id", "batch_id", "accepted")
 
 
@@ -1652,7 +1654,7 @@ def streaming_minhash_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
         bd_new.unpersist()
         cand.unpersist()
 
-    replay_ingest(
+    ctx = replay_ingest(
         spark,
         sf_dir,
         "minhash_neardup_replay",
@@ -1661,6 +1663,8 @@ def streaming_minhash_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
         tables=(seen_sh_t, seen_bd_t),
         step=step,
     )
+    if ctx.rows == 0:  # no batch carried rows, so no table was written
+        return spark.createDataFrame([], "doc_id BIGINT, batch_id BIGINT, accepted BOOLEAN")
     # Results ride the band state: every doc owns exactly 8 band rows
     # stamped with the same (arr, accepted), so the distinct projection
     # IS the one-row-per-doc result relation.
@@ -2108,7 +2112,7 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         sg_new.unpersist()
         vec_new.unpersist()
 
-    replay_ingest(
+    ctx = replay_ingest(
         spark,
         sf_dir,
         "semdedup_ingest_replay",
@@ -2117,6 +2121,8 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         tables=(bkt_t, vec_t),
         step=step,
     )
+    if ctx.rows == 0:  # no batch carried rows, so no vec table was written
+        return spark.createDataFrame([], "vec_id BIGINT, batch_id BIGINT, accepted BOOLEAN")
     # Results ride the vec state: one row per vector with its arrival and
     # accepted flag IS the result relation.
     return spark.table(vec_t).select(
@@ -2304,7 +2310,7 @@ def streaming_kmeans_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["cents"] = new_cents
         state["counts"] = new_counts
 
-    replay_ingest(
+    ctx = replay_ingest(
         spark,
         sf_dir,
         "kmeans_ingest_replay",
@@ -2313,4 +2319,8 @@ def streaming_kmeans_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         tables=(res_t,),
         step=step,
     )
+    if ctx.rows == 0:  # no batch carried rows, so no table was written
+        return spark.createDataFrame(
+            [], "vec_id BIGINT, batch_id BIGINT, cluster_id BIGINT, dist_micro2 BIGINT"
+        )
     return spark.table(res_t).select("vec_id", "batch_id", "cluster_id", "dist_micro2")

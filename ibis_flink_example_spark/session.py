@@ -21,7 +21,21 @@ package assumes:
   the default FileContext one hard-wires the stock raw filesystem. The class
   is compiled once per source and Hadoop version into a jar in the per-user
   cache (``cache_dir``). A session that cannot use it keeps the stock
-  filesystem, and the reason is recorded in ``LOCAL_FS_FALLBACK``.
+  filesystem, and the reason is recorded in ``LOCAL_FS_FALLBACK``;
+- Python workers forked from ``worker_daemon`` (``spark.python.daemon.module``)
+  instead of ``pyspark.daemon``. PySpark refreshes the import caches before
+  every Python task, and on CPython before 3.13 every zip importer then
+  re-reads its archive: ``pyspark.zip``, the spark-core jar, py4j and the
+  package zip, 183 ms of CPU per task in a warm worker, for nothing unless
+  an archive changed. The daemon's importers re-read only a changed archive.
+  The package zip (``package_zip``) goes on the workers'
+  ``spark.executorEnv.PYTHONPATH``, so the daemon imports from any working
+  directory. Sessions this module does not launch, and non-local masters,
+  keep ``pyspark.daemon``.
+
+Built jars and zips stay in the cache while in use: each lookup refreshes
+the entry's mtime, and publishing a new entry removes the same kind's
+entries unused for ``CACHE_MAX_AGE_S``.
 """
 
 from __future__ import annotations
@@ -32,6 +46,7 @@ import os
 import shutil
 import subprocess
 import tempfile
+import time
 import warnings
 import zipfile
 
@@ -44,6 +59,9 @@ REFERENCE_TIMESTAMP_FORMAT = "yyyy-MM-dd HH:mm:ss.SSS"
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _NIO_FS_SOURCE = os.path.join(_PKG_DIR, "jvm", "NioLocalFileSystem.java")
 NIO_LOCAL_FS = "ibis_flink_example_spark.jvm.NioLocalFileSystem"
+WORKER_DAEMON = "ibis_flink_example_spark.worker_daemon"
+# a cache entry no lookup has touched for this long is no live session's
+CACHE_MAX_AGE_S = 7 * 24 * 3600
 FS_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
@@ -93,8 +111,14 @@ def _publish(path: str, build) -> str:
     """Return ``path``, first creating it if missing: ``build(tmp)`` writes
     the file inside a fresh temp dir next to ``path`` and returns its name,
     and ``os.replace`` moves it into place. Processes that build at once
-    each publish a complete file; none sees a partial one."""
-    if os.path.exists(path):
+    each publish a complete file; none sees a partial one. An existing
+    entry's mtime is refreshed; a new one prunes its stale siblings."""
+    try:
+        os.utime(path)
+        return path
+    except FileNotFoundError:
+        pass
+    except OSError:  # a cache entry this user may read but not touch
         return path
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = tempfile.mkdtemp(prefix=".build-", dir=os.path.dirname(path))
@@ -102,7 +126,23 @@ def _publish(path: str, build) -> str:
         os.replace(build(tmp), path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+    _prune(path)
     return path
+
+
+def _prune(path: str) -> None:
+    """Remove the entries beside ``path`` whose name shares its prefix (up
+    to the last ``-``) and whose mtime is older than ``CACHE_MAX_AGE_S``."""
+    cache, name = os.path.split(path)
+    prefix = name.rsplit("-", 1)[0] + "-"
+    cutoff = time.time() - CACHE_MAX_AGE_S
+    for entry in os.scandir(cache):
+        try:
+            if (entry.name.startswith(prefix) and entry.path != path
+                    and entry.stat().st_mtime < cutoff):
+                os.remove(entry.path)
+        except OSError:  # removed by a concurrent prune, or not ours
+            pass
 
 
 def _files(top: str, suffix: str) -> list[str]:
@@ -209,8 +249,10 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or ``local[*]``.
     On a cluster deployment the master comes from spark-submit and this builder
     only contributes conf. A local session this call launches writes local
-    files through ``NIO_LOCAL_FS`` (module docstring); ``extra_conf``'s
-    ``spark.driver.extraClassPath`` is kept and the jar appended to it.
+    files through ``NIO_LOCAL_FS`` and forks Python workers from
+    ``WORKER_DAEMON`` (module docstring); ``extra_conf``'s
+    ``spark.driver.extraClassPath`` and ``spark.executorEnv.PYTHONPATH`` are
+    kept and the jar and the package zip appended to them.
     """
     from pyspark import SparkContext
 
@@ -228,9 +270,10 @@ def get_spark(
     jar = None
     if SparkContext._active_spark_context is None and master.startswith("local"):
         jar = nio_local_fs_jar()
+        _append_path(conf, "spark.executorEnv.PYTHONPATH", _package_zip_anywhere())
+        conf["spark.python.daemon.module"] = WORKER_DAEMON
     if jar:
-        cp = conf.get("spark.driver.extraClassPath")
-        conf["spark.driver.extraClassPath"] = f"{cp}{os.pathsep}{jar}" if cp else jar
+        _append_path(conf, "spark.driver.extraClassPath", jar)
         conf["spark.hadoop.fs.file.impl"] = NIO_LOCAL_FS
         conf["spark.sql.streaming.checkpointFileManagerClass"] = FS_CHECKPOINT_MANAGER
     for k, v in conf.items():
@@ -238,6 +281,10 @@ def get_spark(
     spark = builder.getOrCreate()
     _note_local_fs(spark)
     return spark
+
+
+def _append_path(conf: dict[str, str], key: str, entry: str) -> None:
+    conf[key] = f"{conf[key]}{os.pathsep}{entry}" if conf.get(key) else entry
 
 
 def _note_local_fs(spark: SparkSession) -> None:
@@ -283,15 +330,18 @@ def ship_package_to_workers(spark: SparkSession) -> None:
     global _SHIPPED
     if _SHIPPED:
         return
-    try:
-        path = package_zip()
-    except OSError:  # the cache is not writable: the temp dir serves
-        path = package_zip(tempfile.gettempdir())
-    spark.sparkContext.addPyFile(path)
+    spark.sparkContext.addPyFile(_package_zip_anywhere())
     _SHIPPED = True
 
 
 _SHIPPED = False
+
+
+def _package_zip_anywhere() -> str:
+    try:
+        return package_zip()
+    except OSError:  # the cache is not writable: the temp dir serves
+        return package_zip(tempfile.gettempdir())
 
 
 def apply_session_conf(spark: SparkSession) -> None:

@@ -1,18 +1,24 @@
 """The session's local-filesystem convention (``session.NIO_LOCAL_FS``), its
-build cache, and the ingests' empty-fixture results."""
+Python worker daemon (``session.WORKER_DAEMON``), their build cache, and the
+ingests' empty-fixture results."""
 
 from __future__ import annotations
 
+import importlib
 import os
 import stat
 import subprocess
 import sys
+import time
 import zipfile
+import zipimport
 
 import pytest
 from py4j.protocol import Py4JJavaError
 
-from ibis_flink_example_spark import session
+from ibis_flink_example_spark import session, worker_daemon
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _hadoop(spark):
@@ -103,10 +109,9 @@ def test_concurrent_cache_builds_publish_one_jar_and_one_zip(tmp_path):
         "import sys; from ibis_flink_example_spark import session as s; "
         "print(s.nio_local_fs_jar(sys.argv[1])); print(s.package_zip(sys.argv[1]))"
     )
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     procs = [
         subprocess.Popen(
-            [sys.executable, "-c", code, cache], cwd=root, stdout=subprocess.PIPE, text=True
+            [sys.executable, "-c", code, cache], cwd=REPO_ROOT, stdout=subprocess.PIPE, text=True
         )
         for _ in range(2)
     ]
@@ -121,6 +126,109 @@ def test_concurrent_cache_builds_publish_one_jar_and_one_zip(tmp_path):
     with zipfile.ZipFile(zp) as zf:
         assert zf.testzip() is None
         assert "ibis_flink_example_spark/session.py" in zf.namelist()
+
+
+def test_cache_prunes_stale_entries_of_the_same_kind(tmp_path):
+    """Publishing a new entry removes the same kind's entries unused for
+    longer than CACHE_MAX_AGE_S; fresh ones, other kinds and the returned
+    entry stay, and a lookup refreshes the entry it returns."""
+    cache = tmp_path / "cache"
+    cache.mkdir()
+    old = time.time() - session.CACHE_MAX_AGE_S - 3600
+    entries = {
+        "ibis_flink_example_spark-stale.zip": old,
+        "ibis_flink_example_spark-fresh.zip": time.time() - 3600,
+        "nio-localfs-stale.jar": old,
+    }
+    for name, mtime in entries.items():
+        (cache / name).write_bytes(b"x")
+        os.utime(cache / name, (mtime, mtime))
+    zp = session.package_zip(str(cache))
+    assert sorted(os.listdir(cache)) == sorted(
+        [os.path.basename(zp), "ibis_flink_example_spark-fresh.zip", "nio-localfs-stale.jar"]
+    )
+    os.utime(zp, (old, old))
+    assert session.package_zip(str(cache)) == zp
+    assert os.stat(zp).st_mtime > time.time() - 3600
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+
+
+def test_daemon_zip_importer_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """Under the daemon's invalidation an unchanged archive is not re-read,
+    and a rewritten one is, so its new module imports."""
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"graft_zip_mod_a": "X = 1"})
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", worker_daemon.invalidate_if_changed
+    )
+    reads = []
+    stock_read = zipimport._read_directory
+
+    def counting_read(path):
+        if path == archive:
+            reads.append(path)
+        return stock_read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("graft_zip_mod_a").X == 1
+        importlib.invalidate_caches()
+        n = len(reads)
+        importlib.invalidate_caches()
+        assert len(reads) == n
+        _write_zip(archive, {"graft_zip_mod_a": "X = 1", "graft_zip_mod_b": "Y = 2"})
+        importlib.invalidate_caches()
+        assert len(reads) == n + 1
+        assert importlib.import_module("graft_zip_mod_b").Y == 2
+    finally:
+        for name in ("graft_zip_mod_a", "graft_zip_mod_b"):
+            sys.modules.pop(name, None)
+
+
+def test_session_workers_fork_from_package_daemon(spark):
+    """The test session's Python workers run under the package daemon."""
+
+    def tag(rows):
+        for pdf in rows:
+            yield pdf.assign(daemon=sys.modules["__main__"].__spec__.name)
+
+    assert spark.conf.get("spark.python.daemon.module") == session.WORKER_DAEMON
+    got = spark.range(2).mapInPandas(tag, "id long, daemon string").collect()
+    assert {r.daemon for r in got} == {session.WORKER_DAEMON}
+
+
+def test_daemon_imports_from_any_cwd(tmp_path):
+    """From a cwd outside the repo with PYTHONPATH unset, a get_spark
+    session's mapInPandas runs: the daemon comes from the package zip on
+    the executors' PYTHONPATH."""
+    code = f"""
+import sys
+sys.path.insert(0, {REPO_ROOT!r})
+from ibis_flink_example_spark.session import get_spark
+
+def tag(rows):
+    for pdf in rows:
+        yield pdf.assign(daemon=sys.modules["__main__"].__spec__.name)
+
+spark = get_spark(master="local[1]", shuffle_partitions=1,
+                  extra_conf={{"spark.driver.memory": "512m", "spark.ui.enabled": "false"}})
+rows = spark.range(3).mapInPandas(tag, "id long, daemon string").collect()
+print(sorted(r.id for r in rows), {{r.daemon for r in rows}})
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env, capture_output=True,
+        text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == f"[0, 1, 2] {{{session.WORKER_DAEMON!r}}}"
 
 
 @pytest.mark.parametrize(

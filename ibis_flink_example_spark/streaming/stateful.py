@@ -22,6 +22,20 @@ global watermark would — never a correct-in-Flink row.
 State size: one (ts, value) list per key, pruned to the lookback+delay
 horizon — O(key_cardinality x frame density), the bound Flink's operator
 carries.
+
+State layout: every per-key buffer below is stored as a ``BinaryType``
+field of little-endian int64 bytes (``pack_i64`` / ``unpack_i64``), never
+as ``array<bigint>``; scalar counters stay ``LongType``. Spark resolves the
+state encoder again every micro-batch, and an array field puts a
+``MapObjects`` with fresh lambda-variable ids into the generated state
+projections, so their code differs from batch to batch, misses the codegen
+cache and costs a Janino compile plus JIT warm-up of a new class
+on every batch. Binary and long fields generate the same code every batch.
+Packed bytes also spare the JVM boxing each element into a
+``java.lang.Long`` on the pickle path. Keyed-state schemas here must not
+use arrays or maps. A checkpoint written with the old ``array<bigint>``
+state schema fails Spark's state-schema compatibility check on restart;
+the queries in this package mint a fresh checkpoint per run.
 """
 
 from __future__ import annotations
@@ -35,6 +49,17 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
+
+
+def pack_i64(a) -> bytes:
+    """Array-like of integers -> little-endian int64 bytes (a state field)."""
+    return np.asarray(a).astype("<i8", copy=False).tobytes()
+
+
+def unpack_i64(b) -> np.ndarray:
+    """Little-endian int64 bytes (``bytes`` or ``bytearray``, as the state
+    pickle path returns them) -> read-only int64 array."""
+    return np.frombuffer(b, "<i8")
 
 
 def stateful_range_over_sum(
@@ -65,13 +90,13 @@ def stateful_range_over_sum(
             T.StructField(out_col, T.DoubleType()),
         ]
     )
-    # State: parallel arrays of event-time (µs) and measure values in integer
-    # cents (2-decimal-exact, order-independent sums) kept inside the
-    # lookback+delay horizon of the max timestamp seen.
+    # State: parallel packed int64 arrays of event-time (µs) and measure
+    # values in integer cents (2-decimal-exact, order-independent sums) kept
+    # inside the lookback+delay horizon of the max timestamp seen.
     state_schema = T.StructType(
         [
-            T.StructField("ts_us", T.ArrayType(T.LongType())),
-            T.StructField("cents", T.ArrayType(T.LongType())),
+            T.StructField("ts_us", T.BinaryType()),
+            T.StructField("cents", T.BinaryType()),
         ]
     )
 
@@ -95,9 +120,7 @@ def stateful_range_over_sum(
           float division at the end.
         """
         if state.exists:
-            s_ts, s_cents = state.get
-            prior_ts = np.asarray(s_ts, dtype=np.int64)
-            prior_cents = np.asarray(s_cents, dtype=np.int64)
+            prior_ts, prior_cents = map(unpack_i64, state.get)
         else:
             prior_ts = np.empty(0, dtype=np.int64)
             prior_cents = np.empty(0, dtype=np.int64)
@@ -138,7 +161,7 @@ def stateful_range_over_sum(
             cut = np.searchsorted(
                 all_ts, all_ts[-1] - lookback_us - delay_us, side="left"
             )
-            state.update((all_ts[cut:].tolist(), all_cents[cut:].tolist()))
+            state.update((pack_i64(all_ts[cut:]), pack_i64(all_cents[cut:])))
 
         yield pd.DataFrame(
             {
@@ -207,9 +230,9 @@ def stateful_rows_anomaly(
     )
     state_schema = T.StructType(
         [
-            T.StructField("ts_us", T.ArrayType(T.LongType())),
-            T.StructField("ids", T.ArrayType(T.LongType())),
-            T.StructField("cents", T.ArrayType(T.LongType())),
+            T.StructField("ts_us", T.BinaryType()),
+            T.StructField("ids", T.BinaryType()),
+            T.StructField("cents", T.BinaryType()),
             T.StructField("n_seen", T.LongType()),
         ]
     )
@@ -218,10 +241,8 @@ def stateful_rows_anomaly(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
-            s_ts, s_ids, s_cents, n_seen = state.get
-            buf_ts = np.asarray(s_ts, dtype=np.int64)
-            buf_ids = np.asarray(s_ids, dtype=np.int64)
-            buf_cents = np.asarray(s_cents, dtype=np.int64)
+            *packed, n_seen = state.get
+            buf_ts, buf_ids, buf_cents = map(unpack_i64, packed)
             n_seen = int(n_seen)
         else:
             buf_ts = np.empty(0, dtype=np.int64)
@@ -285,9 +306,9 @@ def stateful_rows_anomaly(
         cut = max(0, len(all_ts) - lookback)
         state.update(
             (
-                all_ts[cut:].tolist(),
-                all_ids[cut:].tolist(),
-                all_cents[cut:].tolist(),
+                pack_i64(all_ts[cut:]),
+                pack_i64(all_ids[cut:]),
+                pack_i64(all_cents[cut:]),
                 n_seen,
             )
         )
@@ -352,7 +373,7 @@ def stateful_funnel_stages(
     )
     state_schema = T.StructType(
         [
-            T.StructField("times", T.ArrayType(T.LongType())),
+            T.StructField("times", T.BinaryType()),
             T.StructField("seq", T.LongType()),
         ]
     )
@@ -361,8 +382,8 @@ def stateful_funnel_stages(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
-            times_list, seq = state.get
-            times = list(times_list)
+            packed, seq = state.get
+            times = unpack_i64(packed).tolist()
             seq = int(seq)
         else:
             times = [-1] * n_steps
@@ -387,7 +408,7 @@ def stateful_funnel_stages(
                     times[i] = int(t)
 
         seq += 1
-        state.update((times, seq))
+        state.update((pack_i64(times), seq))
         yield pd.DataFrame(
             {
                 key: [key_tuple[0]],
@@ -425,11 +446,9 @@ def make_sessionize_update(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
-            s_starts, s_lasts, s_ns, s_cents, emitted_seq, max_seen = state.get
-            sessions = [
-                [int(a), int(b), int(c), int(d)]
-                for a, b, c, d in zip(s_starts, s_lasts, s_ns, s_cents)
-            ]
+            *packed, emitted_seq, max_seen = state.get
+            # rows of (start, last, n, cents) as Python ints
+            sessions = np.stack([unpack_i64(b) for b in packed], axis=1).tolist()
             emitted_seq, max_seen = int(emitted_seq), int(max_seen)
         else:
             sessions, emitted_seq, max_seen = [], 0, -(1 << 62)
@@ -479,16 +498,8 @@ def make_sessionize_update(
             n_final += 1
         finals = sessions[:n_final]
         sessions = sessions[n_final:]
-        state.update(
-            (
-                [s[0] for s in sessions],
-                [s[1] for s in sessions],
-                [s[2] for s in sessions],
-                [s[3] for s in sessions],
-                emitted_seq + n_final,
-                max_seen,
-            )
-        )
+        columns = np.array(sessions, dtype=np.int64).reshape(-1, 4).T
+        state.update((*map(pack_i64, columns), emitted_seq + n_final, max_seen))
 
         yield pd.DataFrame(
             {
@@ -565,13 +576,13 @@ def stateful_sessionize(
             T.StructField("sum_value", T.DoubleType()),
         ]
     )
-    # parallel arrays over unsettled sessions, in start order
+    # parallel packed int64 arrays over unsettled sessions, in start order
     state_schema = T.StructType(
         [
-            T.StructField("starts", T.ArrayType(T.LongType())),
-            T.StructField("lasts", T.ArrayType(T.LongType())),
-            T.StructField("ns", T.ArrayType(T.LongType())),
-            T.StructField("cents", T.ArrayType(T.LongType())),
+            T.StructField("starts", T.BinaryType()),
+            T.StructField("lasts", T.BinaryType()),
+            T.StructField("ns", T.BinaryType()),
+            T.StructField("cents", T.BinaryType()),
             T.StructField("emitted_seq", T.LongType()),
             T.StructField("max_seen", T.LongType()),
         ]

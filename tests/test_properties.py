@@ -10,6 +10,7 @@ point is randomized structure, not volume.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -335,6 +336,30 @@ def test_sessionize_update_equals_batch_reference(data, n_batches, demote, gap, 
         assert row["session_end"].value // 1000 == ref[1]
         assert row["n_events"] == ref[2]
         assert abs(row["sum_value"] - ref[3] / 100.0) < 1e-9
+
+
+@pytest.mark.parametrize(
+    "values", [[], [7], [0, -1, 1 << 62, -(1 << 63), (1 << 63) - 1, 1_700_000_000_000_000]]
+)
+@pytest.mark.parametrize("buffer_type", [bytes, bytearray])
+def test_packed_state_round_trips(values, buffer_type):
+    """Keyed-state buffers are stored as little-endian int64 bytes whatever
+    the host byte order, and read back from the ``bytes`` or ``bytearray``
+    the state pickle path hands the update function."""
+    import struct
+
+    import numpy as np
+
+    from ibis_flink_example_spark.streaming.stateful import pack_i64, unpack_i64
+
+    packed = pack_i64(np.array(values, dtype=np.int64))
+    assert packed == struct.pack(f"<{len(values)}q", *values)
+    assert pack_i64(values) == packed  # a plain list packs the same
+    got = unpack_i64(buffer_type(packed))
+    assert got.dtype == np.dtype("<i8")
+    assert got.tolist() == values
+    big_endian = np.array(values, dtype=">i8")
+    assert pack_i64(big_endian) == packed
 
 
 @given(

@@ -724,6 +724,177 @@ def test_stateful_sessionize_state_survives_restart(spark, tmp_path):
     assert got == [(1, 4, 15.0), (2, 1, 16.0)]
 
 
+_EVENTS_JSON_SCHEMA = (
+    "event_id long, ts long, user_id long, event_type string, value double"
+)
+
+
+def _write_json_batch(src, i, rows):
+    """Publish ``rows`` as ``src/{i:02d}.jsonl`` in one rename, so a running
+    file source never lists a half-written file. The file source replays by
+    mtime, so file ``i`` gets a fixed epoch second plus ``i`` as its mtime
+    (files written within the same millisecond would otherwise tie and
+    replay in any order)."""
+    import json
+
+    tmp = os.path.join(os.path.dirname(src), f".{i:02d}.jsonl")
+    with open(tmp, "w") as fh:
+        fh.write("\n".join(json.dumps(r) for r in rows))
+    os.utime(tmp, (1_700_000_000 + i, 1_700_000_000 + i))
+    os.replace(tmp, os.path.join(src, f"{i:02d}.jsonl"))
+
+
+def _events_json_stream(sess, src):
+    return (
+        sess.readStream.schema(_EVENTS_JSON_SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .json(src)
+        .withColumn("ts", F.timestamp_micros(F.col("ts")))
+    )
+
+
+def _replay_events(i, n_users=3, per_user=4):
+    """Micro-batch ``i`` of an in-order event stream: every user gets
+    ``per_user`` events 2 s apart, starting 8 s after batch ``i - 1``'s, so
+    each batch advances the watermark and frames reach into prior state."""
+    base, s = 1_700_000_000_000_000, 1_000_000
+    types = ["view", "click", "purchase"]
+    return [
+        {
+            "event_id": (i * n_users + u) * per_user + j,
+            "ts": base + (i * 8 + j * 2) * s + u,
+            "user_id": u,
+            "event_type": types[(i + j + u) % 3],
+            "value": round(1.25 * (1 + (i * 7 + j * 3 + u) % 11), 2),
+        }
+        for u in range(n_users)
+        for j in range(per_user)
+    ]
+
+
+@pytest.mark.parametrize(
+    "operator, max_compiles_per_batch",
+    [("range_over_sum", 1), ("rows_anomaly", 1), ("sessionize", 1), ("funnel", 0)],
+)
+def test_stateful_state_codegen_is_stable_across_batches(
+    spark, tmp_path, operator, max_compiles_per_batch
+):
+    """Packed keyed state generates the same code every micro-batch, so
+    Spark's codegen cache hits from batch to batch. Spark inlines the
+    watermark as a literal in the late-event predicate of a watermarked
+    stateful operator, which leaves at most one Janino compile per batch
+    while the watermark advances; the watermark-free funnel must compile
+    nothing. An ``array<bigint>`` state field puts fresh ``MapObjects``
+    lambda ids into the state projections every batch (two more compiles
+    per batch)."""
+    from ibis_flink_example_spark.streaming import stateful
+    from ibis_flink_example_spark.streaming.runtime import state_scoped_session
+
+    common = dict(key="user_id", time_col="ts")
+    build = {
+        "range_over_sum": lambda s: stateful.stateful_range_over_sum(
+            s, **common, measure="value", row_id="event_id",
+            lookback_seconds=10, delay_seconds=15, out_col="value_sum_10s",
+        ),
+        "rows_anomaly": lambda s: stateful.stateful_rows_anomaly(
+            s, **common, measure="value", row_id="event_id", lookback=5, min_prior=2,
+        ),
+        "sessionize": lambda s: stateful.stateful_sessionize(
+            s, **common, measure="value", tiebreak_col="event_id",
+            gap_seconds=5, delay_seconds=15,
+        ),
+        "funnel": lambda s: stateful.stateful_funnel_stages(
+            s, ["view", "click", "purchase"], **common, type_col="event_type",
+        ),
+    }[operator]
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles():
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
+    src = tmp_path / "src"
+    src.mkdir()
+    sess = state_scoped_session(spark, 2)
+    q = (
+        build(_events_json_stream(sess, str(src)))
+        .writeStream.format("noop")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    n_warm, n_measured = 2, 4
+    try:
+        for i in range(n_warm + n_measured):
+            if i == n_warm:
+                before = compiles()
+            _write_json_batch(str(src), i, _replay_events(i))
+            q.processAllAvailable()
+        added = compiles() - before
+        batches = [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+    assert len(batches) == n_warm + n_measured, batches
+    assert added <= max_compiles_per_batch * n_measured, (
+        f"{operator}: {added} codegen compiles over {n_measured} micro-batches"
+    )
+
+
+def test_stateful_over_window_state_survives_restart(spark, tmp_path):
+    """The flagship's packed (ts, cents) buffers round-trip through the
+    RocksDB state store across a checkpointed restart: a run stopped after
+    half the replay and restarted on the same checkpoint emits exactly what
+    one uninterrupted run emits, and both equal the batch RANGE sum."""
+    from ibis_flink_example_spark.streaming.runtime import state_scoped_session
+
+    n_files = 6
+    batches = [_replay_events(i) for i in range(n_files)]
+    sess = state_scoped_session(spark, 2)
+    out_schema = "event_id long, user_id long, ts timestamp, value_sum_10s double"
+
+    def run(src, name):
+        q = (
+            stateful_range_over_sum(
+                _events_json_stream(sess, str(src)),
+                key="user_id", time_col="ts", measure="value", row_id="event_id",
+                lookback_seconds=10, delay_seconds=15, out_col="value_sum_10s",
+            )
+            .writeStream.format("parquet")
+            .option("path", str(tmp_path / f"sink_{name}"))
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return sess.read.schema(out_schema).parquet(str(tmp_path / f"sink_{name}"))
+
+    restarted_src, whole_src = tmp_path / "src_restarted", tmp_path / "src_whole"
+    restarted_src.mkdir()
+    whole_src.mkdir()
+    for i, rows in enumerate(batches):
+        _write_json_batch(str(whole_src), i, rows)
+    for i in range(n_files // 2):
+        _write_json_batch(str(restarted_src), i, batches[i])
+    first = run(restarted_src, "restarted").count()
+    assert 0 < first < sum(map(len, batches))
+    for i in range(n_files // 2, n_files):
+        _write_json_batch(str(restarted_src), i, batches[i])
+    restarted = run(restarted_src, "restarted")
+    whole = run(whole_src, "whole")
+
+    oracle = range_over_sum(
+        sess.createDataFrame([r for b in batches for r in b], _EVENTS_JSON_SCHEMA)
+        .withColumn("ts", F.timestamp_micros(F.col("ts"))),
+        key="user_id", time_col="ts", measure="value",
+        lookback_seconds=10, out_col="value_sum_10s",
+        keep=["event_id", "user_id", "ts"],
+    )
+    cols = ["event_id", "user_id", "ts", "value_sum_10s"]
+    want = _sorted_pdf(oracle, cols)
+    assert _sorted_pdf(restarted, cols).equals(want)
+    assert _sorted_pdf(whole, cols).equals(want)
+
+
 def test_rocksdb_state_store_provider_active(spark, tmp_path):
     """The state_scoped_session default must ACTUALLY run stateful operators
     on the RocksDB state store (not just set a conf string): the drained

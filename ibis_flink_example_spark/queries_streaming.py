@@ -336,12 +336,11 @@ def streaming_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # State partitions are scoped to the stream's private session clone
     # (see _events_stream) — the caller's session conf is never touched.
-    q = foreach_batch(
+    foreach_batch(
         agged,
         lambda bdf, bid: bdf.write.insertInto(_SINK_ROUNDTRIP_TABLE),
         available_now=True,
     )
-    q.awaitTermination()
     return spark.table(_SINK_ROUNDTRIP_TABLE)
 
 
@@ -847,12 +846,11 @@ def streaming_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # State partitions ride the stream's private session clone (see
     # _events_stream); apply_batch's partial aggs inherit it via
     # bdf.sparkSession — no mutation of the caller's session.
-    q = foreach_batch(
+    foreach_batch(
         _events_stream(spark, sf_dir).select("user_id", "value"),
         apply_batch,
         available_now=True,
     )
-    q.awaitTermination()
     if state["cur"] is None:  # zero micro-batches: empty view, not a crash
         return spark.createDataFrame(
             [], "user_id long, total_value double, n_events bigint"
@@ -931,11 +929,10 @@ def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["cur"] = nxt
         state["last_bid"] = bid
 
-    q = foreach_batch(
+    foreach_batch(
         _events_stream(spark, sf_dir).select("user_id"), apply_batch,
         available_now=True,
     )
-    q.awaitTermination()
 
     events = load_table(spark, sf_dir, "events")
     if state["cur"] is None:  # zero micro-batches: empty probe set

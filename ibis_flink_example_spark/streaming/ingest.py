@@ -16,8 +16,6 @@ the operators.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -237,13 +235,10 @@ def replay_ingest(
             raise
         ctx.last_bid = bid
 
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     try:
-        foreach_batch(stream, guarded, checkpoint=ckpt, available_now=True).awaitTermination()
+        foreach_batch(stream, guarded, available_now=True)
     except StreamingQueryException:
         if failed:
             raise failed[0] from None
         raise
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     return ctx

@@ -1,11 +1,12 @@
-"""Streaming runtime utilities: watermark declaration (W2), memory/console
-sinks (S7), availableNow execution, foreachBatch bridge.
+"""Streaming runtime utilities: conf-isolated sessions for stateful
+queries, memory/console sinks (S7), availableNow execution, foreachBatch
+bridge.
 
 Watermark semantics (reference: window_aggregation.py:48-50 —
 ``WATERMARK FOR createTime AS createTime - INTERVAL '15' SECOND``):
-``with_watermark(df, "createTime", 15)`` bounds state and drops rows more
-than 15 s later than the max event-time seen — Spark's
-``withWatermark`` is the direct counterpart (SURVEY.md §2.9 T1/T2).
+Spark's ``df.withWatermark("createTime", "15 seconds")`` is the direct
+counterpart (SURVEY.md §2.9 T1/T2): it bounds state and drops rows more
+than 15 s later than the max event-time seen.
 """
 
 from __future__ import annotations
@@ -15,11 +16,6 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def with_watermark(df: DataFrame, time_col: str, delay_seconds: float) -> DataFrame:
-    """W2: declare event-time + allowed lateness (reference 15 s)."""
-    return df.withWatermark(time_col, f"{delay_seconds} seconds")
 
 
 ROCKSDB_PROVIDER = (
@@ -76,7 +72,6 @@ def run_available_now(
     query_name: str | None = None,
     output_mode: str = "append",
     checkpoint: str | None = None,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion over all currently
     available input (micro-batches until drained), collect results in a
@@ -86,15 +81,6 @@ def run_available_now(
     (batch-vs-stream equivalence, SURVEY.md §5); the memory sink is
     driver-local and strictly for bounded test/verification runs — never a
     production sink.
-
-    ``state_partitions``: number of shuffle/state partitions for THIS query.
-    Streaming state partitioning is a first-class sizing decision — it is
-    latched into the checkpoint at first start and every micro-batch pays a
-    fixed per-partition state-store cost, so it should be sized to the
-    stateful operator's key/state volume (hundreds+ on a real cluster,
-    small for bounded verification runs), not inherited from the relational
-    shuffle setting. Implemented by scoping ``spark.sql.shuffle.partitions``
-    around the query's start; the session value is restored afterwards.
 
     Without ``checkpoint`` the run mints a fresh checkpoint directory and
     removes it once the drained query has terminated (the results live in
@@ -110,15 +96,10 @@ def run_available_now(
         .trigger(availableNow=True)
         .option("checkpointLocation", checkpoint or minted)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
         q = writer.start()
         q.awaitTermination()
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         if minted is not None:
             shutil.rmtree(minted, ignore_errors=True)
     return spark.table(name)
@@ -139,14 +120,25 @@ def foreach_batch(df: DataFrame, fn, *, checkpoint: str | None = None, available
     """Bridge to batch-only sinks/operators: ``fn(batch_df, batch_id)`` runs
     per micro-batch with full batch capabilities (arbitrary writers, MERGE,
     multi-sink fan-out). The workhorse for production sinks Spark lacks
-    native streaming writers for."""
-    writer = df.writeStream.foreachBatch(fn)
-    writer = writer.option(
-        "checkpointLocation", checkpoint or tempfile.mkdtemp(prefix="ckpt_feb_")
+    native streaming writers for.
+
+    With ``available_now`` the call returns once the run has drained
+    (the returned query has terminated). Without ``checkpoint`` the query
+    runs on a fresh checkpoint directory, which a drained run removes
+    before returning; a caller-supplied checkpoint is never touched."""
+    minted = None if checkpoint else tempfile.mkdtemp(prefix="ckpt_feb_")
+    writer = df.writeStream.foreachBatch(fn).option(
+        "checkpointLocation", checkpoint or minted
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    if not available_now:
+        return writer.start()
+    try:
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+    finally:
+        if minted is not None:
+            shutil.rmtree(minted, ignore_errors=True)
+    return q
 
 
 def idempotent_partition_overwrite(

@@ -3,6 +3,30 @@
 Flink's keyed OverAggregate state (a per-key buffer of (ts, value) pairs,
 evicted as event time advances past the lookback).
 
+One scaffold, four operators: ``keyed_state`` owns the wiring (``select``
+→ ``withWatermark`` → ``groupBy`` → ``applyInPandasWithState`` in append
+mode with ``NoTimeout``) and ``keyed_update`` the per-key update around it:
+decode the state, concatenate and mergesort the key's micro-batch on its
+sort keys, convert the event time to epoch µs, call the operator's pure
+``step(key, pdf, ts_us, st) -> pdf`` and encode ``st`` back. ``step``
+reads and reassigns the decoded dict ``st``.
+
+State schema from ``init``: ``init`` maps each state field, in order, to
+its empty value. An ``int`` becomes a ``LongType`` field; any other value
+(a list or tuple of integers) becomes a ``BinaryType`` field of
+little-endian int64 bytes (``pack_i64`` / ``unpack_i64``), which ``step``
+sees as a read-only int64 array. Keyed state therefore never holds arrays
+or maps: Spark resolves the state encoder again every micro-batch, and an
+array field puts a ``MapObjects`` with fresh lambda-variable ids into the
+generated state projections, so their code differs from batch to batch,
+misses the codegen cache and costs a Janino compile plus JIT warm-up of a
+new class on every batch. Binary and long fields generate the same code
+every batch. Packed bytes also spare the JVM boxing each element into a
+``java.lang.Long`` on the pickle path. A checkpoint written with the old
+``array<bigint>`` state schema fails Spark's state-schema compatibility
+check on restart; the queries in this package mint a fresh checkpoint per
+run.
+
 Semantics note vs design (a): results are emitted per micro-batch from the
 rows IN that batch, using state from all prior batches + the current one.
 Within a batch, rows are processed in event-time order, so for any input
@@ -22,25 +46,12 @@ global watermark would — never a correct-in-Flink row.
 State size: one (ts, value) list per key, pruned to the lookback+delay
 horizon — O(key_cardinality x frame density), the bound Flink's operator
 carries.
-
-State layout: every per-key buffer below is stored as a ``BinaryType``
-field of little-endian int64 bytes (``pack_i64`` / ``unpack_i64``), never
-as ``array<bigint>``; scalar counters stay ``LongType``. Spark resolves the
-state encoder again every micro-batch, and an array field puts a
-``MapObjects`` with fresh lambda-variable ids into the generated state
-projections, so their code differs from batch to batch, misses the codegen
-cache and costs a Janino compile plus JIT warm-up of a new class
-on every batch. Binary and long fields generate the same code every batch.
-Packed bytes also spare the JVM boxing each element into a
-``java.lang.Long`` on the pickle path. Keyed-state schemas here must not
-use arrays or maps. A checkpoint written with the old ``array<bigint>``
-state schema fails Spark's state-schema compatibility check on restart;
-the queries in this package mint a fresh checkpoint per run.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import bisect
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import numpy as np
@@ -49,6 +60,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
+
+Step = Callable[[Any, pd.DataFrame, np.ndarray, dict], pd.DataFrame]
 
 
 def pack_i64(a) -> bytes:
@@ -60,6 +73,133 @@ def unpack_i64(b) -> np.ndarray:
     """Little-endian int64 bytes (``bytes`` or ``bytearray``, as the state
     pickle path returns them) -> read-only int64 array."""
     return np.frombuffer(b, "<i8")
+
+
+def keyed_update(step: Step, *, init: dict, sort_by, time_col: str):
+    """The ``applyInPandasWithState`` update function behind
+    ``keyed_state``: decode the key's state (``init`` when it has none),
+    sort the key's rows on ``sort_by``, run ``step`` and encode its
+    ``st`` back. Tests drive it with a fake ``GroupState``."""
+    fields = [(name, isinstance(v, int)) for name, v in init.items()]
+    # buffers read back exactly as from state: read-only int64 arrays
+    empty = {
+        n: v if isinstance(v, int) else unpack_i64(pack_i64(v)) for n, v in init.items()
+    }
+
+    def update(
+        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            st = {
+                name: int(v) if scalar else unpack_i64(v)
+                for (name, scalar), v in zip(fields, state.get)
+            }
+        else:
+            st = dict(empty)
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        pdf = pdf.sort_values(sort_by, kind="mergesort")
+        # normalize to µs regardless of pandas datetime unit (ns or µs)
+        ts_us = pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy()
+        out = step(key_tuple[0], pdf, ts_us, st)
+        state.update(
+            tuple(st[name] if scalar else pack_i64(st[name]) for name, scalar in fields)
+        )
+        yield out
+
+    return update
+
+
+def keyed_state(
+    stream: DataFrame, step: Step, *, key: str, columns: list[str], time_col: str,
+    sort_by, out_fields: list[T.StructField], init: dict, delay_seconds: float | None,
+) -> DataFrame:
+    """Run ``step`` per key of ``stream[columns]`` on state declared by
+    ``init`` (see the module docstring), watermarked by ``delay_seconds``
+    on ``time_col`` unless it is None. Returns an append stream of
+    ``out_fields``."""
+    src = stream.select(*columns)
+    if delay_seconds is not None:
+        src = src.withWatermark(time_col, f"{delay_seconds} seconds")
+    state_schema = T.StructType([
+        T.StructField(n, T.LongType() if isinstance(v, int) else T.BinaryType())
+        for n, v in init.items()
+    ])
+    return src.groupBy(key).applyInPandasWithState(
+        keyed_update(step, init=init, sort_by=sort_by, time_col=time_col),
+        outputStructType=T.StructType(out_fields),
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _cents(values: pd.Series) -> np.ndarray:
+    """Half-up quantization to integer cents — the SAME idiom as the batch
+    twins and SQL oracles (np.rint is half-to-even and would diverge on
+    exact .5 products if the 2-decimal input contract were ever violated)."""
+    return np.floor(values.to_numpy() * 100 + 0.5).astype(np.int64)
+
+
+def _admitted(row_ts: np.ndarray, buf_ts: np.ndarray, delay_us: int) -> np.ndarray:
+    """Per-key watermark drop (T2): a row more than ``delay_us`` behind the
+    newest buffered event time is late. Within the sorted batch a row is
+    never late relative to same-batch rows (its own ts is part of the
+    running max), so the cut is against the prior batches' max only."""
+    if len(buf_ts):
+        return row_ts >= buf_ts[-1] - delay_us
+    return np.ones(len(row_ts), dtype=bool)
+
+
+def range_sum_step(
+    *, key: str, row_id: str, time_col: str, measure: str, out_col: str,
+    lookback_us: int, delay_us: int,
+) -> Step:
+    """Trailing RANGE-frame sum over state ``ts_us`` / ``cents``: parallel
+    int64 buffers of event time (µs) and measure in integer cents
+    (2-decimal-exact, order-independent sums) kept inside the
+    lookback+delay horizon of the max timestamp seen.
+
+    Vectorized: one numpy pass per (key, batch) instead of a per-row Python
+    loop over the buffer (O(n log n) vs O(n·frame)).
+    - Eviction can't change any emitted frame: evicted entries sit below
+      max - lookback - delay, while every non-late row's frame floor is
+      >= max - delay - lookback. So eviction happens once, at the end.
+    - RANGE-frame peers (equal ts) are all included via searchsorted
+      side='right' — exact SQL RANGE ... CURRENT ROW semantics.
+    - Sums accumulate integer cents; one float division at the end.
+    """
+
+    def step(k, pdf, row_ts, st):
+        prior_ts = st["ts_us"]
+        keep = _admitted(row_ts, prior_ts, delay_us)
+        kept_ts = row_ts[keep]
+
+        # merged sorted timeline = surviving buffer + this batch's rows
+        all_ts = np.concatenate([prior_ts, kept_ts])
+        all_cents = np.concatenate([st["cents"], _cents(pdf[measure])[keep]])
+        order = np.argsort(all_ts, kind="stable")
+        all_ts = all_ts[order]
+        all_cents = all_cents[order]
+        cum = np.cumsum(all_cents)
+
+        # frame [t - lookback, t] per kept row: prefix-sum difference
+        hi = np.searchsorted(all_ts, kept_ts, side="right")
+        lo = np.searchsorted(all_ts, kept_ts - lookback_us, side="left")
+        sums = (cum[hi - 1] - np.where(lo > 0, cum[lo - 1], 0)) / 100.0
+
+        # evict once: keep lookback+delay of history behind the new max
+        cut = np.searchsorted(all_ts, all_ts[-1] - lookback_us - delay_us, side="left")
+        st["ts_us"], st["cents"] = all_ts[cut:], all_cents[cut:]
+        return pd.DataFrame(
+            {
+                row_id: pdf[row_id].to_numpy()[keep],
+                key: np.repeat(k, len(kept_ts)),
+                time_col: pdf[time_col].to_numpy()[keep],
+                out_col: sums,
+            }
+        )
+
+    return step
 
 
 def stateful_range_over_sum(
@@ -78,110 +218,94 @@ def stateful_range_over_sum(
     ``stream``: streaming DataFrame with event-time ``time_col`` (watermark is
     applied here). Returns an append stream (row_id, key, time_col, out_col).
     """
-    lookback_us = int(lookback_seconds * 1_000_000)
-    delay_us = int(delay_seconds * 1_000_000)
-
     in_schema = stream.schema
-    out_schema = T.StructType(
-        [
+    step = range_sum_step(
+        key=key, row_id=row_id, time_col=time_col, measure=measure,
+        out_col=out_col, lookback_us=int(lookback_seconds * 1_000_000),
+        delay_us=int(delay_seconds * 1_000_000),
+    )
+    return keyed_state(
+        stream, step, key=key, columns=[row_id, key, time_col, measure],
+        time_col=time_col, sort_by=time_col,
+        out_fields=[
             T.StructField(row_id, in_schema[row_id].dataType),
             T.StructField(key, in_schema[key].dataType),
             T.StructField(time_col, T.TimestampType()),
             T.StructField(out_col, T.DoubleType()),
-        ]
-    )
-    # State: parallel packed int64 arrays of event-time (µs) and measure
-    # values in integer cents (2-decimal-exact, order-independent sums) kept
-    # inside the lookback+delay horizon of the max timestamp seen.
-    state_schema = T.StructType(
-        [
-            T.StructField("ts_us", T.BinaryType()),
-            T.StructField("cents", T.BinaryType()),
-        ]
+        ],
+        init={"ts_us": (), "cents": ()},
+        delay_seconds=delay_seconds,
     )
 
-    def update(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Vectorized trailing-sum: one numpy pass per (key, batch) instead of
-        a per-row Python loop over the buffer (O(n log n) vs O(n·frame)).
 
-        Correctness notes:
-        - Late cut is vs the PRIOR batches' max only: within the sorted batch
-          a row can never be late relative to same-batch rows (its own ts is
-          part of the running max), so the evolving-max rule of the row-at-a-
-          time formulation collapses to one vector compare.
-        - Eviction can't change any emitted frame: evicted entries sit below
-          max - lookback - delay, while every non-late row's frame floor is
-          >= max - delay - lookback. So eviction happens once, at the end.
-        - RANGE-frame peers (equal ts) are all included via searchsorted
-          side='right' — exact SQL RANGE ... CURRENT ROW semantics.
-        - Sums accumulate integer cents (exact for 2-decimal measures); one
-          float division at the end.
-        """
-        if state.exists:
-            prior_ts, prior_cents = map(unpack_i64, state.get)
-        else:
-            prior_ts = np.empty(0, dtype=np.int64)
-            prior_cents = np.empty(0, dtype=np.int64)
+def anomaly_step(
+    *, key: str, row_id: str, measure: str, lookback: int, min_prior: int,
+    z_threshold: int, delay_us: int,
+) -> Step:
+    """ROWS-frame z-test over state ``ts_us`` / ``ids`` / ``cents`` (the
+    last ``lookback`` events of the key) and ``n_seen`` (a lifetime
+    counter, so ``n_prior`` matches the batch semantics before the buffer
+    fills); see ``stateful_rows_anomaly``."""
+    t2 = z_threshold * z_threshold
 
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(time_col, kind="mergesort")
-        # normalize to µs regardless of pandas datetime unit (ns or µs)
-        row_ts = pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy()
-        # half-up quantization — the SAME idiom as the batch twins and SQL
-        # oracles (np.rint is half-to-even and would diverge on exact .5
-        # products if the 2-decimal input contract were ever violated)
-        row_cents = np.floor(pdf[measure].to_numpy() * 100 + 0.5).astype(np.int64)
+    def step(k, pdf, row_ts, st):
+        buf_ts, n_seen = st["ts_us"], st["n_seen"]
+        keep = _admitted(row_ts, buf_ts, delay_us)
+        k_ts = row_ts[keep]
+        k_ids = pdf[row_id].to_numpy(dtype=np.int64)[keep]
+        k_cents = _cents(pdf[measure])[keep]
+        k_vals = pdf[measure].to_numpy()[keep]
 
-        # per-key watermark drop (T2): more than `delay` behind the key's max
-        keep = (
-            row_ts >= prior_ts[-1] - delay_us
-            if len(prior_ts)
-            else np.ones(len(row_ts), dtype=bool)
-        )
-        kept_ts = row_ts[keep]
-        kept_cents = row_cents[keep]
+        # Merge buffer + batch into (ts, id) order. In-order replay appends;
+        # a within-delay straggler lands in its exact batch-semantics slot.
+        all_ts = np.concatenate([buf_ts, k_ts])
+        all_ids = np.concatenate([st["ids"], k_ids])
+        all_cents = np.concatenate([st["cents"], k_cents])
+        order = np.lexsort((all_ids, all_ts))
+        all_ts, all_ids, all_cents = all_ts[order], all_ids[order], all_cents[order]
 
-        # merged sorted timeline = surviving buffer + this batch's rows
-        all_ts = np.concatenate([prior_ts, kept_ts])
-        all_cents = np.concatenate([prior_cents, kept_cents])
-        order = np.argsort(all_ts, kind="stable")
-        all_ts = all_ts[order]
-        all_cents = all_cents[order]
-        cum = np.cumsum(all_cents)
+        cum_s = np.concatenate([[0], np.cumsum(all_cents)])
+        cum_q = np.concatenate([[0], np.cumsum(all_cents * all_cents)])
+        # merged position of each new row (positions of batch entries in the
+        # merged order = where their concat-indices ended up)
+        pos_of = np.empty(len(order), dtype=np.int64)
+        pos_of[order] = np.arange(len(order))
+        new_pos = pos_of[len(buf_ts):]
 
-        # frame [t - lookback, t] per kept row: prefix-sum difference
-        hi = np.searchsorted(all_ts, kept_ts, side="right")
-        lo = np.searchsorted(all_ts, kept_ts - lookback_us, side="left")
-        sums = (cum[hi - 1] - np.where(lo > 0, cum[lo - 1], 0)) / 100.0
+        # prior-`lookback` frame in merged coordinates; rows that predate the
+        # retained buffer are already beyond lookback by construction
+        hidden = n_seen - len(buf_ts)  # evicted history (all older than buffer)
+        total_before = new_pos + hidden
+        n = np.minimum(total_before, lookback).astype(np.int64)
+        # A straggler sorting before retained-buffer entries can have a
+        # frame extending into EVICTED history; clamp to the retained
+        # horizon (lo >= 0) — without this, negative lo wraps the numpy
+        # prefix arrays and corrupts s/q. In-order arrival never clamps
+        # (new rows sort after the whole buffer, so new_pos >= n always).
+        n = np.minimum(n, new_pos)
+        lo = new_pos - n
+        s = cum_s[new_pos] - cum_s[lo]
+        q = cum_q[new_pos] - cum_q[lo]
+        x = all_cents[new_pos]
+        dev = n * x - s
+        flagged = (n >= min_prior) & (dev * dev > t2 * (n * q - s * s))
 
-        # evict once: keep lookback+delay of history behind the new max
-        if len(all_ts):
-            cut = np.searchsorted(
-                all_ts, all_ts[-1] - lookback_us - delay_us, side="left"
-            )
-            state.update((pack_i64(all_ts[cut:]), pack_i64(all_cents[cut:])))
-
-        yield pd.DataFrame(
+        cut = max(0, len(all_ts) - lookback)
+        st["ts_us"], st["ids"], st["cents"] = all_ts[cut:], all_ids[cut:], all_cents[cut:]
+        st["n_seen"] = n_seen + len(k_ts)
+        return pd.DataFrame(
             {
-                row_id: pdf[row_id].to_numpy()[keep],
-                key: np.repeat(key_tuple[0], len(kept_ts)),
-                time_col: pdf[time_col].to_numpy()[keep],
-                out_col: sums,
+                row_id: k_ids,
+                key: np.repeat(k, len(k_ids)),
+                measure: k_vals,
+                # n/flagged are indexed by concat order = batch sorted
+                # order, so they align with k_ids element-wise
+                "n_prior": n.astype(np.int32),
+                "is_anomaly": flagged,
             }
         )
 
-    watermarked = stream.select(row_id, key, time_col, measure).withWatermark(
-        time_col, f"{delay_seconds} seconds"
-    )
-    return watermarked.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return step
 
 
 def stateful_rows_anomaly(
@@ -215,126 +339,56 @@ def stateful_rows_anomaly(
     horizon only — a truncated-but-consistent frame, never corrupted
     state; in-order arrival never truncates.
     """
-    delay_us = int(delay_seconds * 1_000_000)
-    t2 = z_threshold * z_threshold
-
     in_schema = stream.schema
-    out_schema = T.StructType(
-        [
+    step = anomaly_step(
+        key=key, row_id=row_id, measure=measure, lookback=lookback,
+        min_prior=min_prior, z_threshold=z_threshold,
+        delay_us=int(delay_seconds * 1_000_000),
+    )
+    return keyed_state(
+        stream, step, key=key, columns=[row_id, key, time_col, measure],
+        time_col=time_col, sort_by=[time_col, row_id],
+        out_fields=[
             T.StructField(row_id, in_schema[row_id].dataType),
             T.StructField(key, in_schema[key].dataType),
             T.StructField(measure, T.DoubleType()),
             T.StructField("n_prior", T.IntegerType()),
             T.StructField("is_anomaly", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("ts_us", T.BinaryType()),
-            T.StructField("ids", T.BinaryType()),
-            T.StructField("cents", T.BinaryType()),
-            T.StructField("n_seen", T.LongType()),
-        ]
+        ],
+        init={"ts_us": (), "ids": (), "cents": (), "n_seen": 0},
+        delay_seconds=delay_seconds,
     )
 
-    def update(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            *packed, n_seen = state.get
-            buf_ts, buf_ids, buf_cents = map(unpack_i64, packed)
-            n_seen = int(n_seen)
-        else:
-            buf_ts = np.empty(0, dtype=np.int64)
-            buf_ids = np.empty(0, dtype=np.int64)
-            buf_cents = np.empty(0, dtype=np.int64)
-            n_seen = 0
 
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values([time_col, row_id], kind="mergesort")
-        row_ts = pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy()
-        row_ids = pdf[row_id].to_numpy(dtype=np.int64)
-        # half-up quantization — the SAME idiom as the batch twins and SQL
-        # oracles (np.rint is half-to-even and would diverge on exact .5
-        # products if the 2-decimal input contract were ever violated)
-        row_cents = np.floor(pdf[measure].to_numpy() * 100 + 0.5).astype(np.int64)
-        row_vals = pdf[measure].to_numpy()
+def funnel_step(steps: list[str], *, key: str, type_col: str) -> Step:
+    """Stage completion times over state ``times`` (one per step, -1 for
+    unreached) and ``seq`` (micro-batches seen); see
+    ``stateful_funnel_stages``."""
+    step_idx = {s: i for i, s in enumerate(steps)}
 
-        keep = (
-            row_ts >= buf_ts[-1] - delay_us
-            if len(buf_ts)
-            else np.ones(len(row_ts), dtype=bool)
-        )
-        k_ts, k_ids = row_ts[keep], row_ids[keep]
-        k_cents, k_vals = row_cents[keep], row_vals[keep]
-
-        # Merge buffer + batch into (ts, id) order. In-order replay appends;
-        # a within-delay straggler lands in its exact batch-semantics slot.
-        all_ts = np.concatenate([buf_ts, k_ts])
-        all_ids = np.concatenate([buf_ids, k_ids])
-        all_cents = np.concatenate([buf_cents, k_cents])
-        order = np.lexsort((all_ids, all_ts))
-        all_ts, all_ids, all_cents = all_ts[order], all_ids[order], all_cents[order]
-
-        cum_s = np.concatenate([[0], np.cumsum(all_cents)])
-        cum_q = np.concatenate([[0], np.cumsum(all_cents * all_cents)])
-        # merged position of each new row (positions of batch entries in the
-        # merged order = where their concat-indices ended up)
-        pos_of = np.empty(len(order), dtype=np.int64)
-        pos_of[order] = np.arange(len(order))
-        new_pos = pos_of[len(buf_ts):]
-
-        # prior-`lookback` frame in merged coordinates; rows that predate the
-        # retained buffer are already beyond lookback by construction
-        hidden = n_seen - len(buf_ts)  # evicted history (all older than buffer)
-        total_before = new_pos + hidden
-        n = np.minimum(total_before, lookback).astype(np.int64)
-        # A straggler sorting before retained-buffer entries can have a
-        # frame extending into EVICTED history; clamp to the retained
-        # horizon (lo >= 0) — without this, negative lo wraps the numpy
-        # prefix arrays and corrupts s/q. In-order arrival never clamps
-        # (new rows sort after the whole buffer, so new_pos >= n always).
-        n = np.minimum(n, new_pos)
-        lo = new_pos - n
-        s = cum_s[new_pos] - cum_s[lo]
-        q = cum_q[new_pos] - cum_q[lo]
-        x = all_cents[new_pos]
-        dev = n * x - s
-        flagged = (n >= min_prior) & (dev * dev > t2 * (n * q - s * s))
-
-        n_seen += len(k_ts)
-        cut = max(0, len(all_ts) - lookback)
-        state.update(
-            (
-                pack_i64(all_ts[cut:]),
-                pack_i64(all_ids[cut:]),
-                pack_i64(all_cents[cut:]),
-                n_seen,
-            )
-        )
-
-        yield pd.DataFrame(
+    def step(k, pdf, ts_us, st):
+        times = st["times"].tolist()
+        for t, ty in zip(ts_us, pdf[type_col].to_numpy()):
+            i = step_idx.get(ty)
+            if i is None:
+                continue
+            if i == 0:
+                if times[0] == -1 or t < times[0]:
+                    times[0] = int(t)
+            else:
+                prev = times[i - 1]
+                if prev != -1 and t > prev and (times[i] == -1 or t < times[i]):
+                    times[i] = int(t)
+        st["times"], st["seq"] = times, st["seq"] + 1
+        return pd.DataFrame(
             {
-                row_id: k_ids,
-                key: np.repeat(key_tuple[0], len(k_ids)),
-                measure: k_vals,
-                # n/flagged are indexed by concat order = batch sorted
-                # order, so they align with k_ids element-wise
-                "n_prior": n.astype(np.int32),
-                "is_anomaly": flagged,
+                key: [k],
+                "update_seq": [st["seq"]],
+                **{f"t_{s}_us": [times[i]] for i, s in enumerate(steps)},
             }
         )
 
-    watermarked = stream.select(row_id, key, time_col, measure).withWatermark(
-        time_col, f"{delay_seconds} seconds"
-    )
-    return watermarked.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return step
 
 
 def stateful_funnel_stages(
@@ -360,109 +414,33 @@ def stateful_funnel_stages(
     snapshot is the max-``update_seq`` row per key (run_available_now
     output post-processed with max_by).
     """
-    n_steps = len(steps)
-    out_schema = T.StructType(
-        [
+    return keyed_state(
+        stream, funnel_step(steps, key=key, type_col=type_col), key=key,
+        columns=[key, time_col, type_col], time_col=time_col, sort_by=time_col,
+        out_fields=[
             T.StructField(key, stream.schema[key].dataType),
             T.StructField("update_seq", T.LongType()),
-            *[
-                T.StructField(f"t_{s}_us", T.LongType())
-                for s in steps
-            ],
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("times", T.BinaryType()),
-            T.StructField("seq", T.LongType()),
-        ]
-    )
-
-    def update(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            packed, seq = state.get
-            times = unpack_i64(packed).tolist()
-            seq = int(seq)
-        else:
-            times = [-1] * n_steps
-            seq = 0
-
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(time_col, kind="mergesort")
-        ts_us = pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy()
-        types = pdf[type_col].to_numpy()
-
-        step_idx = {s: i for i, s in enumerate(steps)}
-        for t, ty in zip(ts_us, types):
-            i = step_idx.get(ty)
-            if i is None:
-                continue
-            if i == 0:
-                if times[0] == -1 or t < times[0]:
-                    times[0] = int(t)
-            else:
-                prev = times[i - 1]
-                if prev != -1 and t > prev and (times[i] == -1 or t < times[i]):
-                    times[i] = int(t)
-
-        seq += 1
-        state.update((pack_i64(times), seq))
-        yield pd.DataFrame(
-            {
-                key: [key_tuple[0]],
-                "update_seq": [seq],
-                **{f"t_{s}_us": [times[i]] for i, s in enumerate(steps)},
-            }
-        )
-
-    return stream.select(key, time_col, type_col).groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+            *[T.StructField(f"t_{s}_us", T.LongType()) for s in steps],
+        ],
+        init={"times": [-1] * len(steps), "seq": 0},
+        delay_seconds=None,
     )
 
 
-def make_sessionize_update(
-    *,
-    key: str,
-    time_col: str,
-    measure: str,
-    tiebreak_col: str,
-    gap_us: int,
-    delay_us: int,
-):
-    """Build the per-key ``applyInPandasWithState`` update function for
-    stateful_sessionize. Factored out so the property tests can drive the
-    EXACT production merge/finalize logic against an independent batch
-    reference with a fake GroupState — no duplicated algorithm copies (the
-    returned closure is still self-contained for pickling; cloudpickle
-    serializes nested closures by value)."""
+def sessionize_step(*, key: str, measure: str, gap_us: int, delay_us: int) -> Step:
+    """Session insert/merge/bridge and watermark-final emission over state
+    ``starts`` / ``lasts`` / ``ns`` / ``cents`` (parallel int64 buffers
+    over the unsettled sessions, in start order), ``emitted_seq`` and
+    ``max_seen``; see ``stateful_sessionize``."""
 
-    def update(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            *packed, emitted_seq, max_seen = state.get
-            # rows of (start, last, n, cents) as Python ints
-            sessions = np.stack([unpack_i64(b) for b in packed], axis=1).tolist()
-            emitted_seq, max_seen = int(emitted_seq), int(max_seen)
-        else:
-            sessions, emitted_seq, max_seen = [], 0, -(1 << 62)
+    def step(k, pdf, row_ts, st):
+        # rows of (start, last, n, cents) as Python ints
+        sessions = np.stack(
+            [st["starts"], st["lasts"], st["ns"], st["cents"]], axis=1
+        ).tolist()
+        emitted_seq, max_seen = st["emitted_seq"], st["max_seen"]
 
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values([time_col, tiebreak_col], kind="mergesort")
-        row_ts = pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy()
-        # half-up — same idiom as every 2-decimal money path in the package
-        row_cents = np.floor(pdf[measure].to_numpy() * 100 + 0.5).astype(np.int64)
-
-        import bisect
-
-        for t, c in zip(row_ts, row_cents):
-            t, c = int(t), int(c)
+        for t, c in zip(row_ts.tolist(), _cents(pdf[measure]).tolist()):
             if t < max_seen - delay_us:
                 continue  # beyond the per-key lateness budget: drop
             max_seen = max(max_seen, t)
@@ -497,29 +475,25 @@ def make_sessionize_update(
         while n_final < len(sessions) and sessions[n_final][1] + gap_us < wm:
             n_final += 1
         finals = sessions[:n_final]
-        sessions = sessions[n_final:]
-        columns = np.array(sessions, dtype=np.int64).reshape(-1, 4).T
-        state.update((*map(pack_i64, columns), emitted_seq + n_final, max_seen))
+        st["starts"], st["lasts"], st["ns"], st["cents"] = (
+            np.array(sessions[n_final:], dtype=np.int64).reshape(-1, 4).T
+        )
+        st["emitted_seq"], st["max_seen"] = emitted_seq + n_final, max_seen
 
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
-                key: np.repeat(key_tuple[0], n_final),
+                key: np.repeat(k, n_final),
                 "session_seq": np.arange(
                     emitted_seq + 1, emitted_seq + n_final + 1, dtype=np.int64
                 ),
-                "session_start": np.array(
-                    [s[0] for s in finals], dtype="datetime64[us]"
-                ),
-                "session_end": np.array(
-                    [s[1] for s in finals], dtype="datetime64[us]"
-                ),
+                "session_start": np.array([s[0] for s in finals], dtype="datetime64[us]"),
+                "session_end": np.array([s[1] for s in finals], dtype="datetime64[us]"),
                 "n_events": np.array([s[2] for s in finals], dtype=np.int64),
-                "sum_value": np.array([s[3] for s in finals], dtype=np.float64)
-                / 100.0,
+                "sum_value": np.array([s[3] for s in finals], dtype=np.float64) / 100.0,
             }
         )
 
-    return update
+    return step
 
 
 def stateful_sessionize(
@@ -563,46 +537,24 @@ def stateful_sessionize(
     sum_value) — identical column contract to the batch query; sums carry
     integer cents internally (2-decimal-exact, order-independent).
     """
-    gap_us = int(gap_seconds * 1_000_000)
-    delay_us = int(delay_seconds * 1_000_000)
-
-    out_schema = T.StructType(
-        [
+    step = sessionize_step(
+        key=key, measure=measure, gap_us=int(gap_seconds * 1_000_000),
+        delay_us=int(delay_seconds * 1_000_000),
+    )
+    return keyed_state(
+        stream, step, key=key, columns=[key, time_col, tiebreak_col, measure],
+        time_col=time_col, sort_by=[time_col, tiebreak_col],
+        out_fields=[
             T.StructField(key, stream.schema[key].dataType),
             T.StructField("session_seq", T.LongType()),
             T.StructField("session_start", T.TimestampType()),
             T.StructField("session_end", T.TimestampType()),
             T.StructField("n_events", T.LongType()),
             T.StructField("sum_value", T.DoubleType()),
-        ]
-    )
-    # parallel packed int64 arrays over unsettled sessions, in start order
-    state_schema = T.StructType(
-        [
-            T.StructField("starts", T.BinaryType()),
-            T.StructField("lasts", T.BinaryType()),
-            T.StructField("ns", T.BinaryType()),
-            T.StructField("cents", T.BinaryType()),
-            T.StructField("emitted_seq", T.LongType()),
-            T.StructField("max_seen", T.LongType()),
-        ]
-    )
-
-    update = make_sessionize_update(
-        key=key,
-        time_col=time_col,
-        measure=measure,
-        tiebreak_col=tiebreak_col,
-        gap_us=gap_us,
-        delay_us=delay_us,
-    )
-    watermarked = stream.select(key, time_col, tiebreak_col, measure).withWatermark(
-        time_col, f"{delay_seconds} seconds"
-    )
-    return watermarked.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        ],
+        init={
+            "starts": (), "lasts": (), "ns": (), "cents": (),
+            "emitted_seq": 0, "max_seen": -(1 << 62),
+        },
+        delay_seconds=delay_seconds,
     )

@@ -244,6 +244,27 @@ class _FakeGroupState:
         self._v = v
 
 
+# The ``init`` each operator in streaming/stateful.py passes to keyed_state.
+_RANGE_SUM_INIT = {"ts_us": (), "cents": ()}
+_ANOMALY_INIT = {"ts_us": (), "ids": (), "cents": (), "n_seen": 0}
+_SESSIONIZE_INIT = {
+    "starts": (), "lasts": (), "ns": (), "cents": (), "emitted_seq": 0, "max_seen": -(1 << 62),
+}
+
+
+def _drive(update, batches):
+    """Feed each pandas batch to ``update`` for key 1 over one fake state;
+    returns the emitted frames, one per batch."""
+    state = _FakeGroupState()
+    return [pd.concat(list(update((1,), iter([b]), state))) for b in batches]
+
+
+def _split(n, cuts):
+    """Split ``range(n)`` into contiguous, non-empty batches at ``cuts``."""
+    bounds = sorted({c % n for c in cuts} - {0})
+    return [list(range(a, b)) for a, b in zip([0, *bounds], [*bounds, n])]
+
+
 def _reference_sessionize(admitted, gap_us, final_max, delay_us):
     """Independent batch gaps-and-islands over the admitted (ts, cents)
     events + watermark-final cut — a different formulation (global sort
@@ -285,7 +306,7 @@ def test_sessionize_update_equals_batch_reference(data, n_batches, demote, gap, 
 
     import pandas as pd
 
-    from ibis_flink_example_spark.streaming.stateful import make_sessionize_update
+    from ibis_flink_example_spark.streaming.stateful import keyed_update, sessionize_step
 
     gap_us, delay_us = gap, delay  # treat units as µs directly
     events = sorted((t, i, c) for i, (t, c) in enumerate(data))
@@ -299,9 +320,9 @@ def test_sessionize_update_equals_batch_reference(data, n_batches, demote, gap, 
             b += 1
         batches[b].append(ev)
 
-    update = make_sessionize_update(
-        key="user_id", time_col="ts", measure="value",
-        tiebreak_col="event_id", gap_us=gap_us, delay_us=delay_us,
+    update = keyed_update(
+        sessionize_step(key="user_id", measure="value", gap_us=gap_us, delay_us=delay_us),
+        init=_SESSIONIZE_INIT, sort_by=["ts", "event_id"], time_col="ts",
     )
     state = _FakeGroupState()
     emitted = []
@@ -336,6 +357,167 @@ def test_sessionize_update_equals_batch_reference(data, n_batches, demote, gap, 
         assert row["session_end"].value // 1000 == ref[1]
         assert row["n_events"] == ref[2]
         assert abs(row["sum_value"] - ref[3] / 100.0) < 1e-9
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    data=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=300),  # event time (µs), arrival order
+            st.integers(min_value=-500, max_value=500),  # cents
+        ),
+        min_size=1,
+        max_size=60,
+    ),
+    cuts=st.lists(st.integers(min_value=0, max_value=59), max_size=6),
+    lookback=st.integers(min_value=0, max_value=80),
+    delay=st.integers(min_value=0, max_value=60),
+)
+def test_range_sum_state_equals_brute_force_across_batches(data, cuts, lookback, delay):
+    """The production range-sum update, driven over a random split of an
+    arrival sequence with stragglers, emits for every admitted row the SUM
+    over the RANGE frame [ts - lookback, ts] of all rows admitted so far,
+    and drops exactly the rows more than ``delay`` behind the key's max."""
+    from ibis_flink_example_spark.streaming.stateful import keyed_update, range_sum_step
+
+    update = keyed_update(
+        range_sum_step(
+            key="k", row_id="id", time_col="ts", measure="v", out_col="s",
+            lookback_us=lookback, delay_us=delay,
+        ),
+        init=_RANGE_SUM_INIT, sort_by="ts", time_col="ts",
+    )
+    batches = _split(len(data), cuts)
+    outs = _drive(update, [
+        pd.DataFrame({
+            "id": b,
+            "k": 1,
+            "ts": pd.to_datetime([data[i][0] for i in b], unit="us"),
+            "v": [data[i][1] / 100.0 for i in b],
+        })
+        for b in batches
+    ])
+    admitted = []  # (ts, cents) of every row admitted so far
+    for b, out in zip(batches, outs):
+        horizon = max((t for t, _c in admitted), default=None)
+        kept = [i for i in b if horizon is None or data[i][0] >= horizon - delay]
+        admitted += [data[i] for i in kept]
+        want = {
+            i: sum(c for t, c in admitted if data[i][0] - lookback <= t <= data[i][0]) / 100.0
+            for i in kept
+        }
+        got = dict(zip(out["id"], out["s"]))
+        assert got == want
+        assert (out["k"] == 1).all()
+        assert [t.value // 1000 for t in out["ts"]] == [data[i][0] for i in out["id"]]
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    data=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=50),  # event time (µs)
+            st.integers(min_value=-300, max_value=300),  # cents
+        ),
+        min_size=1,
+        max_size=60,
+    ),
+    cuts=st.lists(st.integers(min_value=0, max_value=59), max_size=6),
+    lookback=st.integers(min_value=1, max_value=8),
+    min_prior=st.integers(min_value=1, max_value=5),
+    z=st.integers(min_value=1, max_value=3),
+)
+def test_anomaly_state_equals_brute_force_across_batches(data, cuts, lookback, min_prior, z):
+    """The production ROWS-frame anomaly update, driven in event-time order
+    over a random split into micro-batches, flags exactly the rows whose
+    value deviates from the mean of the previous ``lookback`` rows of the
+    key by more than ``z`` population standard deviations (at least
+    ``min_prior`` prior rows), with ``n_prior`` the size of that frame."""
+    from fractions import Fraction
+
+    from ibis_flink_example_spark.streaming.stateful import anomaly_step, keyed_update
+
+    update = keyed_update(
+        anomaly_step(
+            key="k", row_id="id", measure="v", lookback=lookback,
+            min_prior=min_prior, z_threshold=z, delay_us=0,
+        ),
+        init=_ANOMALY_INIT, sort_by=["ts", "id"], time_col="ts",
+    )
+    rows = sorted((t, i, c) for i, (t, c) in enumerate(data))  # (ts, id) order
+    batches = _split(len(rows), cuts)
+    outs = _drive(update, [
+        pd.DataFrame({
+            "id": [rows[j][1] for j in b],
+            "k": 1,
+            "ts": pd.to_datetime([rows[j][0] for j in b], unit="us"),
+            "v": [rows[j][2] / 100.0 for j in b],
+        })
+        for b in batches
+    ])
+    got = pd.concat(outs, ignore_index=True)
+    assert got["id"].tolist() == [i for _t, i, _c in rows]
+    for j, (_t, i, c) in enumerate(rows):
+        prior = [Fraction(p[2]) for p in rows[max(0, j - lookback):j]]
+        n = len(prior)
+        flagged = False
+        if n >= min_prior:
+            mean = sum(prior) / n
+            var = sum((p - mean) ** 2 for p in prior) / n
+            flagged = (c - mean) ** 2 > z * z * var
+        assert got["n_prior"][j] == n
+        assert bool(got["is_anomaly"][j]) == flagged
+        assert got["v"][j] == c / 100.0
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    data=st.lists(
+        st.tuples(st.integers(min_value=0, max_value=40), st.sampled_from("abcx")),
+        min_size=1,
+        max_size=60,
+    ),
+    cuts=st.lists(st.integers(min_value=0, max_value=59), max_size=6),
+)
+def test_funnel_state_any_split_equals_one_batch(data, cuts):
+    """The production funnel update over an event-time-ordered stream
+    reaches the same stage times whatever the micro-batch split: the last
+    emitted row of a split run equals the one row of a single-batch run and
+    the stage definition (t_1 = first 'a'; t_k+1 = first step-k+1 event
+    strictly after t_k), and ``update_seq`` counts the batches."""
+    from ibis_flink_example_spark.streaming.stateful import funnel_step, keyed_update
+
+    steps = ["a", "b", "c"]
+    events = sorted(data, key=lambda e: e[0])
+
+    def run(batches):
+        update = keyed_update(
+            funnel_step(steps, key="k", type_col="ty"),
+            init={"times": [-1] * len(steps), "seq": 0}, sort_by="ts", time_col="ts",
+        )
+        return _drive(update, [
+            pd.DataFrame({
+                "k": 1,
+                "ts": pd.to_datetime([events[i][0] for i in b], unit="us"),
+                "ty": [events[i][1] for i in b],
+            })
+            for b in batches
+        ])
+
+    cols = [f"t_{s}_us" for s in steps]
+    split = run(_split(len(events), cuts))
+    single = run([list(range(len(events)))])
+    assert split[-1][cols].values.tolist() == single[0][cols].values.tolist()
+    assert split[-1]["update_seq"].tolist() == [len(split)]
+    want, prev = [], None
+    for s in steps:
+        t = next((t for t, ty in events if ty == s and (prev is None or t > prev)), -1)
+        want.append(t)
+        if t == -1:
+            want += [-1] * (len(steps) - len(want))
+            break
+        prev = t
+    assert single[0][cols].values.tolist() == [want]
 
 
 @pytest.mark.parametrize(

@@ -6,12 +6,14 @@ the JSON format layer."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ibis_flink_example_spark.catalog import load_table
 from ibis_flink_example_spark.functions.exact import dec_sum
@@ -839,6 +841,63 @@ def test_stateful_state_codegen_is_stable_across_batches(
     )
 
 
+_BIN, _LONG = "binary", "bigint"
+
+
+@pytest.mark.parametrize(
+    "operator, state_fields",
+    [
+        ("range_over_sum", [("ts_us", _BIN), ("cents", _BIN)]),
+        ("rows_anomaly", [("ts_us", _BIN), ("ids", _BIN), ("cents", _BIN), ("n_seen", _LONG)]),
+        ("funnel", [("times", _BIN), ("seq", _LONG)]),
+        (
+            "sessionize",
+            [("starts", _BIN), ("lasts", _BIN), ("ns", _BIN), ("cents", _BIN),
+             ("emitted_seq", _LONG), ("max_seen", _LONG)],
+        ),
+    ],
+)
+def test_stateful_state_schema_is_pinned(spark, tmp_path, operator, state_fields):
+    """The state struct each operator plans carries exactly these fields,
+    in this order and with these types: a checkpoint's state must stay
+    readable on restart, and only binary and long fields keep the state
+    projections' generated code stable across micro-batches."""
+    from ibis_flink_example_spark.streaming import stateful
+
+    common = dict(key="user_id", time_col="ts")
+    stream = _events_json_stream(spark, str(tmp_path))
+    df = {
+        "range_over_sum": lambda: stateful.stateful_range_over_sum(
+            stream, **common, measure="value", row_id="event_id",
+            lookback_seconds=10, delay_seconds=15, out_col="s",
+        ),
+        "rows_anomaly": lambda: stateful.stateful_rows_anomaly(
+            stream, **common, measure="value", row_id="event_id",
+        ),
+        "funnel": lambda: stateful.stateful_funnel_stages(
+            stream, ["view", "click"], **common, type_col="event_type",
+        ),
+        "sessionize": lambda: stateful.stateful_sessionize(
+            stream, **common, measure="value", tiebreak_col="event_id",
+            gap_seconds=5, delay_seconds=15,
+        ),
+    }[operator]()
+
+    def find(node):
+        if node.nodeName() == "FlatMapGroupsInPandasWithState":
+            return node
+        kids = node.children()
+        return next(
+            (n for n in (find(kids.apply(i)) for i in range(kids.size())) if n), None
+        )
+
+    state_type = find(df._jdf.queryExecution().analyzed()).stateType()
+    got = [(f.name, f.dataType.simpleString()) for f in T.StructType.fromJson(
+        json.loads(state_type.json())
+    ).fields]
+    assert got == state_fields
+
+
 def test_stateful_over_window_state_survives_restart(spark, tmp_path):
     """The flagship's packed (ts, cents) buffers round-trip through the
     RocksDB state store across a checkpointed restart: a run stopped after
@@ -1186,17 +1245,25 @@ def test_ingest_aqe_dial_is_size_aware(spark):
 
 
 def test_drained_runs_leave_no_checkpoint_dirs(spark, sf_dir, tmp_path, monkeypatch):
-    """A replay ingest and an availableNow memory-sink run each mint a
-    fresh checkpoint directory and remove it once the drained query has
-    terminated, so repeated runs do not pile up ``ckpt_*`` dirs."""
+    """A replay ingest, an availableNow memory-sink run and an availableNow
+    foreachBatch run each mint a fresh checkpoint directory and remove it
+    once the drained query has terminated, so repeated runs do not pile up
+    ``ckpt_*`` dirs."""
     from ibis_flink_example_spark.queries import QUERIES
-    from ibis_flink_example_spark.streaming.runtime import run_available_now
+    from ibis_flink_example_spark.streaming.runtime import foreach_batch, run_available_now
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     assert QUERIES["streaming_exactly_once_sink"](spark, sf_dir).count() > 0
     src = str(tmp_path / "src")
     spark.range(5).write.parquet(src)
     assert run_available_now(spark.readStream.schema("id long").parquet(src)).count() == 5
+    seen = []
+    q = foreach_batch(
+        spark.readStream.schema("id long").parquet(src),
+        lambda bdf, bid: seen.append(bdf.count()),
+        available_now=True,
+    )
+    assert not q.isActive and sum(seen) == 5
     assert not list(tmp_path.glob("ckpt_*"))
 
 

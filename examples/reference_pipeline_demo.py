@@ -110,25 +110,9 @@ def main() -> None:
         .select(F.col("value").cast("binary").alias("value"))
     )
     payments = decode_json_value(raw, PAYMENT_MSG_SCHEMA)
-    # Design (b), the stateful operator: a drained run emits EVERY row's
-    # aggregate, so it equals the batch query row-for-row. (Design (a),
-    # payment_query_stream's declarative watermarked self-join — used in
-    # the Kafka arm above — is append-gated by the output watermark: a
-    # drained bounded run legitimately withholds the last watermark-delay
-    # of rows, so it suits unbounded topics, not an equality demo.)
-    from ibis_flink_example_spark.streaming.stateful import stateful_range_over_sum
-
-    agged = stateful_range_over_sum(
-        payments,
-        key="provinceId",
-        time_col="createTime",
-        measure="payAmount",
-        row_id="orderId",
-        lookback_seconds=10,
-        delay_seconds=15,
-        out_col="pay_amount",
-    ).select(F.col("provinceId").alias("province_id"), "pay_amount")
-    result = run_available_now(agged, output_mode="append")
+    # the same query as the Kafka arm; a drained run emits every row's
+    # aggregate, so it equals the batch query row-for-row
+    result = run_available_now(payment_query_stream(payments), output_mode="append")
 
     # the reference's verification tap: 10 sink records
     sink_rows = encode_json_value(result).limit(10).collect()

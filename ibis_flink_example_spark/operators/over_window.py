@@ -19,7 +19,8 @@ whole-stage codegen around the projection; state is bounded by the frame, not
 the partition, so a 100 TB scan streams through. Skewed keys are split by AQE;
 for pathological single-key skew, pre-aggregate per (key, time-bucket) first.
 
-The streaming form of this operator is in ``streaming/over_window.py``.
+The streaming form of ``range_over_sum`` is ``stateful_range_over_sum`` in
+``streaming/stateful.py``.
 """
 
 from __future__ import annotations

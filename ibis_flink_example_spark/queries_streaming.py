@@ -257,13 +257,12 @@ FROM events
 
 @query("streaming_over_range_sum", oracle=_STREAMING_OVER_ORACLE)
 def streaming_over_range_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FLAGSHIP executed as a real streaming job via the custom stateful
-    operator (streaming/stateful.py, design b): per-key buffer state under
-    applyInPandasWithState, exactly Flink's OverAggregate shape
-    (window_aggregation.py:73-80). Emits one row per input row per batch,
-    so a drained availableNow run equals the batch window-function oracle
-    row-for-row. (Design (a), the watermarked self-join, is append-gated by
-    the output watermark and is exercised in tests/test_streaming.py.)"""
+    """The FLAGSHIP executed as a real streaming job via the keyed-state
+    operator ``stateful_range_over_sum`` (streaming/stateful.py): per-key
+    buffer state under applyInPandasWithState, exactly Flink's
+    OverAggregate shape (window_aggregation.py:73-80). Emits one row per
+    input row per batch, so a drained availableNow run equals the batch
+    window-function oracle row-for-row."""
     from ibis_flink_example_spark.streaming.runtime import run_available_now
     from ibis_flink_example_spark.streaming.stateful import stateful_range_over_sum
 
@@ -336,69 +335,8 @@ def streaming_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # State partitions are scoped to the stream's private session clone
     # (see _events_stream) — the caller's session conf is never touched.
-    foreach_batch(
-        agged,
-        lambda bdf, bid: bdf.write.insertInto(_SINK_ROUNDTRIP_TABLE),
-        available_now=True,
-    )
+    foreach_batch(agged, lambda bdf, bid: bdf.write.insertInto(_SINK_ROUNDTRIP_TABLE))
     return spark.table(_SINK_ROUNDTRIP_TABLE)
-
-
-@query(
-    "streaming_over_range_sum_join",
-    # Append mode finalizes a per-row group once the watermark passes its
-    # event time; a drained availableNow run's final watermark is
-    # max(ts) - 15 s, so the oracle is the batch RANGE frame restricted to
-    # rows strictly older than that horizon.
-    oracle="""
-WITH wm AS (SELECT MAX(ts) - INTERVAL 15 SECOND AS w FROM events)
-SELECT event_id, user_id, ts, value_sum_10s FROM (
-  SELECT
-    event_id,
-    user_id,
-    ts,
-    CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
-      PARTITION BY user_id ORDER BY ts
-      RANGE BETWEEN INTERVAL 10 SECONDS PRECEDING AND CURRENT ROW
-    ) AS DOUBLE) AS value_sum_10s
-  FROM events
-) t, wm
-WHERE t.ts < wm.w
-""",
-)
-def streaming_over_range_sum_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FLAGSHIP executed as a real streaming job via design (a): the
-    fully declarative watermarked SELF-JOIN + per-row-identity aggregation
-    (streaming/over_window.py) — Catalyst plans it end-to-end, state is
-    join state bounded by watermark + lookback.
-
-    DESIGN BRACKET, NOT THE PRODUCTION PATH: ``streaming_over_range_sum``
-    (design b, one bounded per-key buffer) is the canonical streaming W1
-    — measured ~4x cheaper under RocksDB at sf0.1 (~2.4 s vs ~9-12 s,
-    r8) and strictly smaller state at scale. The gap is structural (two
-    stateful operators here, every row written to both join sides plus an
-    agg group); partition-count and trackTotalNumberOfRows sweeps moved
-    nothing. This query stays registered because it is the only fully
-    declarative formulation — no custom state code — and its green oracle
-    row pins the join+agg machinery itself."""
-    from ibis_flink_example_spark.streaming.over_window import (
-        streaming_range_over_sum,
-    )
-    from ibis_flink_example_spark.streaming.runtime import run_available_now
-
-    return run_available_now(
-        streaming_range_over_sum(
-            _events_stream(spark, sf_dir),
-            key="user_id",
-            time_col="ts",
-            measure="value",
-            row_id="event_id",
-            lookback_seconds=10,
-            delay_seconds=15,
-            out_col="value_sum_10s",
-        ),
-        output_mode="append",
-    )
 
 
 @query(
@@ -846,11 +784,7 @@ def streaming_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # State partitions ride the stream's private session clone (see
     # _events_stream); apply_batch's partial aggs inherit it via
     # bdf.sparkSession — no mutation of the caller's session.
-    foreach_batch(
-        _events_stream(spark, sf_dir).select("user_id", "value"),
-        apply_batch,
-        available_now=True,
-    )
+    foreach_batch(_events_stream(spark, sf_dir).select("user_id", "value"), apply_batch)
     if state["cur"] is None:  # zero micro-batches: empty view, not a crash
         return spark.createDataFrame(
             [], "user_id long, total_value double, n_events bigint"
@@ -929,10 +863,7 @@ def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["cur"] = nxt
         state["last_bid"] = bid
 
-    foreach_batch(
-        _events_stream(spark, sf_dir).select("user_id"), apply_batch,
-        available_now=True,
-    )
+    foreach_batch(_events_stream(spark, sf_dir).select("user_id"), apply_batch)
 
     events = load_table(spark, sf_dir, "events")
     if state["cur"] is None:  # zero micro-batches: empty probe set

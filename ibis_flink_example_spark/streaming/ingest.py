@@ -236,7 +236,7 @@ def replay_ingest(
         ctx.last_bid = bid
 
     try:
-        foreach_batch(stream, guarded, available_now=True)
+        foreach_batch(stream, guarded)
     except StreamingQueryException:
         if failed:
             raise failed[0] from None

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ibis_flink_example_spark.operators.over_window import range_over_sum
-from ibis_flink_example_spark.streaming.over_window import streaming_range_over_sum
+from ibis_flink_example_spark.streaming.stateful import stateful_range_over_sum
 
 WATERMARK_DELAY_S = 15  # reference: window_aggregation.py:49
 LOOKBACK_S = 10  # reference: window_aggregation.py:76
@@ -39,10 +39,13 @@ def payment_query_batch(payments: DataFrame) -> DataFrame:
 
 
 def payment_query_stream(payments: DataFrame) -> DataFrame:
-    """The same query on a STREAMING payment_msg DataFrame (self-join
-    emulation). Emits (province_id, pay_amount) append rows — the sink shape
-    of the reference (window_aggregation.py:54-59)."""
-    agged = streaming_range_over_sum(
+    """The same query on a STREAMING payment_msg DataFrame, on the keyed
+    range-sum state of ``stateful_range_over_sum``. Emits (province_id,
+    pay_amount) append rows — the sink shape of the reference
+    (window_aggregation.py:54-59) — one per admitted input row in the
+    micro-batch that carries it, so a drained bounded run equals
+    ``payment_query_batch`` row for row."""
+    agged = stateful_range_over_sum(
         payments,
         key="provinceId",
         time_col="createTime",

@@ -116,24 +116,24 @@ def console_tap(df: DataFrame, num_rows: int = 10, truncate: bool = False):
     )
 
 
-def foreach_batch(df: DataFrame, fn, *, checkpoint: str | None = None, available_now: bool = False):
+def foreach_batch(df: DataFrame, fn, *, checkpoint: str | None = None):
     """Bridge to batch-only sinks/operators: ``fn(batch_df, batch_id)`` runs
     per micro-batch with full batch capabilities (arbitrary writers, MERGE,
     multi-sink fan-out). The workhorse for production sinks Spark lacks
     native streaming writers for.
 
-    With ``available_now`` the call returns once the run has drained
-    (the returned query has terminated). Without ``checkpoint`` the query
-    runs on a fresh checkpoint directory, which a drained run removes
-    before returning; a caller-supplied checkpoint is never touched."""
+    Runs with the availableNow trigger and returns the terminated query
+    once the run has drained. Without ``checkpoint`` the query runs on a
+    fresh checkpoint directory, removed before returning; a
+    caller-supplied checkpoint is never touched."""
     minted = None if checkpoint else tempfile.mkdtemp(prefix="ckpt_feb_")
-    writer = df.writeStream.foreachBatch(fn).option(
-        "checkpointLocation", checkpoint or minted
+    writer = (
+        df.writeStream.foreachBatch(fn)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint or minted)
     )
-    if not available_now:
-        return writer.start()
     try:
-        q = writer.trigger(availableNow=True).start()
+        q = writer.start()
         q.awaitTermination()
     finally:
         if minted is not None:

@@ -1,7 +1,9 @@
-"""Design (b) for the streaming over-window: a custom stateful operator via
-``applyInPandasWithState`` (SURVEY.md §2.9 T3, §2.10) — the Spark analog of
-Flink's keyed OverAggregate state (a per-key buffer of (ts, value) pairs,
-evicted as event time advances past the lookback).
+"""Keyed streaming state for the streaming over-window and its siblings: a
+custom stateful operator via ``applyInPandasWithState`` (SURVEY.md §2.9
+T3, §2.10) — the Spark analog of Flink's keyed OverAggregate state (a
+per-key buffer of (ts, value) pairs, evicted as event time advances past
+the lookback). ``stateful_range_over_sum`` is the package's one streaming
+RANGE sum; ``streaming/pipeline.py`` builds the reference pipeline on it.
 
 One scaffold, four operators: ``keyed_state`` owns the wiring (``select``
 → ``withWatermark`` → ``groupBy`` → ``applyInPandasWithState`` in append
@@ -27,12 +29,13 @@ every batch. Packed bytes also spare the JVM boxing each element into a
 check on restart; the queries in this package mint a fresh checkpoint per
 run.
 
-Semantics note vs design (a): results are emitted per micro-batch from the
-rows IN that batch, using state from all prior batches + the current one.
-Within a batch, rows are processed in event-time order, so for any input
-split the emitted aggregate for each row equals the batch RANGE-frame result
-over rows seen so far — identical to (a) and to the batch oracle when the
-input arrives in watermark-respecting order.
+Emission: results are emitted per micro-batch from the rows IN that
+batch, using state from all prior batches + the current one. Within a
+batch, rows are processed in event-time order, so for any input split the
+emitted aggregate for each row equals the batch RANGE-frame result over
+rows seen so far — the batch oracle when the input arrives in
+watermark-respecting order. No row waits for the watermark, so a drained
+bounded run emits every admitted row.
 
 Late-row contract (Flink `OverAggregate` parity, SURVEY.md §2.9 T2): the
 buffer retains ``lookback + delay`` of history behind each key's max event
@@ -243,13 +246,11 @@ def anomaly_step(
     z_threshold: int, delay_us: int,
 ) -> Step:
     """ROWS-frame z-test over state ``ts_us`` / ``ids`` / ``cents`` (the
-    last ``lookback`` events of the key) and ``n_seen`` (a lifetime
-    counter, so ``n_prior`` matches the batch semantics before the buffer
-    fills); see ``stateful_rows_anomaly``."""
+    last ``lookback`` events of the key); see ``stateful_rows_anomaly``."""
     t2 = z_threshold * z_threshold
 
     def step(k, pdf, row_ts, st):
-        buf_ts, n_seen = st["ts_us"], st["n_seen"]
+        buf_ts = st["ts_us"]
         keep = _admitted(row_ts, buf_ts, delay_us)
         k_ts = row_ts[keep]
         k_ids = pdf[row_id].to_numpy(dtype=np.int64)[keep]
@@ -272,17 +273,12 @@ def anomaly_step(
         pos_of[order] = np.arange(len(order))
         new_pos = pos_of[len(buf_ts):]
 
-        # prior-`lookback` frame in merged coordinates; rows that predate the
-        # retained buffer are already beyond lookback by construction
-        hidden = n_seen - len(buf_ts)  # evicted history (all older than buffer)
-        total_before = new_pos + hidden
-        n = np.minimum(total_before, lookback).astype(np.int64)
-        # A straggler sorting before retained-buffer entries can have a
-        # frame extending into EVICTED history; clamp to the retained
-        # horizon (lo >= 0) — without this, negative lo wraps the numpy
-        # prefix arrays and corrupts s/q. In-order arrival never clamps
-        # (new rows sort after the whole buffer, so new_pos >= n always).
-        n = np.minimum(n, new_pos)
+        # prior-`lookback` frame in merged coordinates. The buffer holds
+        # the key's last `lookback` events, so an in-order row has
+        # min(lookback, events seen) of them before it; a straggler sorting
+        # before retained-buffer entries has its frame clamped to the
+        # retained horizon (lo >= 0), since evicted history is gone.
+        n = np.minimum(new_pos, lookback)
         lo = new_pos - n
         s = cum_s[new_pos] - cum_s[lo]
         q = cum_q[new_pos] - cum_q[lo]
@@ -292,7 +288,6 @@ def anomaly_step(
 
         cut = max(0, len(all_ts) - lookback)
         st["ts_us"], st["ids"], st["cents"] = all_ts[cut:], all_ids[cut:], all_cents[cut:]
-        st["n_seen"] = n_seen + len(k_ts)
         return pd.DataFrame(
             {
                 row_id: k_ids,
@@ -326,10 +321,10 @@ def stateful_rows_anomaly(
     (payment-fraud flags over the reference's payment stream).
 
     State per key is O(lookback): the last ``lookback`` (ts_us, id, cents)
-    triples plus a lifetime counter (so ``n_prior`` matches the batch
-    semantics before the buffer fills). The z-test runs in integer cents —
-    identical to the batch operator, so a drained in-order run equals the
-    batch oracle row-for-row. Late rows: ROWS frames are arrival-
+    triples, so before the buffer fills it holds every event the key has
+    seen and ``n_prior`` matches the batch semantics. The z-test runs in
+    integer cents — identical to the batch operator, so a drained in-order
+    run equals the batch oracle row-for-row. Late rows: ROWS frames are arrival-
     order-sensitive, so rows more than ``delay_seconds`` behind the key's
     max event time are dropped (same per-key watermark contract as
     ``stateful_range_over_sum``); rows within the delay are merged into
@@ -355,7 +350,7 @@ def stateful_rows_anomaly(
             T.StructField("n_prior", T.IntegerType()),
             T.StructField("is_anomaly", T.BooleanType()),
         ],
-        init={"ts_us": (), "ids": (), "cents": (), "n_seen": 0},
+        init={"ts_us": (), "ids": (), "cents": ()},
         delay_seconds=delay_seconds,
     )
 

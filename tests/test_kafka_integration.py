@@ -5,9 +5,11 @@ run end-to-end against a real broker.
 
 No broker exists in the build sandbox, so this module SKIPS explicitly
 unless ``KAFKA_BOOTSTRAP`` is set (e.g. ``localhost:9092``). Wherever a
-broker is available the test must be green; the parse/serialize plumbing
-itself is covered broker-free in test_streaming.py through the identical
-decode/encode path.
+broker is available the test must be green. Broker-free,
+``test_streaming.py::test_payment_pipeline_end_to_end`` runs the same
+``payment_query_stream`` through the identical decode/encode path over a
+file stream and pins the same contract: the drained sink holds one row per
+input row, equal to ``payment_query_batch``.
 
 Connector classpath: provide spark-sql-kafka at session build
 (``--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<ver>``) or set

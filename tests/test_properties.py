@@ -246,7 +246,7 @@ class _FakeGroupState:
 
 # The ``init`` each operator in streaming/stateful.py passes to keyed_state.
 _RANGE_SUM_INIT = {"ts_us": (), "cents": ()}
-_ANOMALY_INIT = {"ts_us": (), "ids": (), "cents": (), "n_seen": 0}
+_ANOMALY_INIT = {"ts_us": (), "ids": (), "cents": ()}
 _SESSIONIZE_INIT = {
     "starts": (), "lasts": (), "ns": (), "cents": (), "emitted_seq": 0, "max_seen": -(1 << 62),
 }

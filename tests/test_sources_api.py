@@ -96,12 +96,7 @@ def test_stream_parquet_dir_replays_fixture(spark, events_subset):
         )
         assert stream.isStreaming
         seen: list[int] = []
-        q = foreach_batch(
-            stream,
-            lambda bdf, bid: seen.append(bdf.count()),
-            available_now=True,
-        )
-        q.awaitTermination(60)
+        foreach_batch(stream, lambda bdf, bid: seen.append(bdf.count()))
         assert sum(seen) == 200
     finally:
         shutil.rmtree(d, ignore_errors=True)
@@ -131,7 +126,7 @@ def test_stream_jsonl_dir_and_console_tap(spark, events_subset):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_payment_rate_source_schema_and_rows(spark):
+def test_payment_rate_source_schema_and_rows(spark, tmp_path):
     src = payment_rate_source(spark, rows_per_second=50)
     assert src.isStreaming
     assert [f.name for f in src.schema.fields] == [
@@ -142,7 +137,13 @@ def test_payment_rate_source_schema_and_rows(spark):
         "provinceId",
     ]
     got: list = []
-    q = foreach_batch(src, lambda bdf, bid: got.extend(bdf.collect()))
+    # an unbounded source never drains, so this run is a plain
+    # foreachBatch query that the test stops itself
+    q = (
+        src.writeStream.foreachBatch(lambda bdf, bid: got.extend(bdf.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
     try:
         deadline = time.time() + 20
         while time.time() < deadline and not got:

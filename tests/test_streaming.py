@@ -22,7 +22,6 @@ from ibis_flink_example_spark.operators.over_window import range_over_sum
 from ibis_flink_example_spark.schema import PAYMENT_MSG_SCHEMA
 from ibis_flink_example_spark.sources.kafka import decode_json_value, encode_json_value
 from ibis_flink_example_spark.streaming.runtime import run_available_now
-from ibis_flink_example_spark.streaming.over_window import streaming_range_over_sum
 from ibis_flink_example_spark.streaming.stateful import stateful_range_over_sum
 
 
@@ -107,8 +106,9 @@ def test_stream_tumble_equals_batch(spark, sf_dir, events_replay_dir):
 
 
 def test_stateful_over_window_equals_batch(spark, sf_dir, events_replay_dir):
-    """Design (b): multi-batch in-order replay through applyInPandasWithState
-    equals the batch RANGE over-window exactly, row for row."""
+    """The keyed-state RANGE sum: multi-batch in-order replay through
+    applyInPandasWithState equals the batch RANGE over-window exactly, row
+    for row."""
     batch = range_over_sum(
         load_table(spark, sf_dir, "events"),
         key="user_id",
@@ -133,51 +133,6 @@ def test_stateful_over_window_equals_batch(spark, sf_dir, events_replay_dir):
     )
     cols = ["event_id", "user_id", "ts", "value_sum_10s"]
     assert _sorted_pdf(batch, cols).equals(_sorted_pdf(streamed, cols))
-
-
-def test_selfjoin_over_window_watermark_semantics(spark, sf_dir, events_replay_dir):
-    """Design (a): the watermarked self-join emits exactly the batch result
-    for rows whose event time the final watermark passed; later rows are
-    legitimately still in state when the bounded run drains (append-mode
-    watermark gating — the price of the fully declarative design)."""
-    streamed = run_available_now(
-        streaming_range_over_sum(
-            _stream_events(spark, events_replay_dir),
-            key="user_id",
-            time_col="ts",
-            measure="value",
-            row_id="event_id",
-            lookback_seconds=10,
-            delay_seconds=15,
-            out_col="value_sum_10s",
-        ),
-        output_mode="append",
-    )
-    batch = range_over_sum(
-        load_table(spark, sf_dir, "events"),
-        key="user_id",
-        time_col="ts",
-        measure="value",
-        lookback_seconds=10,
-        out_col="value_sum_10s",
-        keep=["event_id", "user_id", "ts"],
-    )
-    cols = ["event_id", "user_id", "ts", "value_sum_10s"]
-    got = _sorted_pdf(streamed, cols)
-    assert len(got) > 0, "append-mode self-join emitted nothing"
-    # every emitted row must match the batch result exactly
-    want = _sorted_pdf(batch, cols)
-    merged = got.merge(want, on=["event_id"], suffixes=("_s", "_b"))
-    assert len(merged) == len(got)
-    assert (merged["value_sum_10s_s"] == merged["value_sum_10s_b"]).all()
-    # and the emitted set must cover everything older than the last-but-one
-    # batch's watermark horizon (conservative lower bound)
-    emitted = set(got["event_id"])
-    import pandas as pd
-
-    wpdf = want[want["ts"] < want["ts"].max() - pd.Timedelta(seconds=15) * 2 - pd.Timedelta(minutes=60)]
-    missing = set(wpdf["event_id"]) - emitted
-    assert not missing, f"{len(missing)} watermark-passed rows never emitted"
 
 
 def test_stateful_sessionize_multibatch_equals_batch(spark, sf_dir, events_replay_dir):
@@ -456,8 +411,9 @@ def test_stateful_out_of_order_within_delay(spark):
 def test_payment_pipeline_end_to_end(spark):
     """Reference pipeline (SURVEY.md §1.5): JSON wire format → declared
     schema decode → watermark → streaming over-window → JSON sink encode,
-    through a file stream standing in for Kafka. Checked against the batch
-    form of the same query (payment_query_batch)."""
+    through a file stream standing in for Kafka: ``payment_query_stream``
+    drained, checked row for row against the batch form of the same query
+    (``payment_query_batch``)."""
     import json
     import random
 
@@ -510,27 +466,19 @@ def test_payment_pipeline_end_to_end(spark):
     )
     want = payment_query_batch(payments_batch)
 
-    # streaming run (stateful emulation drains fully; self-join variant is
-    # covered by test_selfjoin_over_window_watermark_semantics)
+    # streaming run: the package's pipeline assembly, drained. Every input
+    # row yields one output row, as the live-broker test asserts
+    # (tests/test_kafka_integration.py); a design that holds rows back
+    # until the watermark passes them fails the exact equality below.
     stream_raw = (
         spark.readStream.schema("value string")
         .option("maxFilesPerTrigger", "1")
         .text(os.path.join(d))
         .select(F.col("value").cast("binary").alias("value"))
     )
-    payments_stream = decode_json_value(stream_raw, PAYMENT_MSG_SCHEMA)
-    agged = stateful_range_over_sum(
-        payments_stream,
-        key="provinceId",
-        time_col="createTime",
-        measure="payAmount",
-        row_id="orderId",
-        lookback_seconds=10,
-        delay_seconds=15,
-        out_col="pay_amount",
-    )
-    got = run_available_now(agged, output_mode="append").select(
-        F.col("provinceId").alias("province_id"), "pay_amount"
+    got = run_available_now(
+        payment_query_stream(decode_json_value(stream_raw, PAYMENT_MSG_SCHEMA)),
+        output_mode="append",
     )
     cols = ["province_id", "pay_amount"]
     assert _sorted_pdf(got, cols).equals(_sorted_pdf(want, cols))
@@ -620,8 +568,7 @@ def test_incremental_upsert_across_restarts(spark, tmp_path):
             .option("recursiveFileLookup", "true")
             .parquet(str(src))
         )
-        q = foreach_batch(stream, apply_batch, checkpoint=ckpt, available_now=True)
-        q.awaitTermination()
+        foreach_batch(stream, apply_batch, checkpoint=ckpt)
 
     run_once()
     after_first = dict(state["totals"])
@@ -848,7 +795,7 @@ _BIN, _LONG = "binary", "bigint"
     "operator, state_fields",
     [
         ("range_over_sum", [("ts_us", _BIN), ("cents", _BIN)]),
-        ("rows_anomaly", [("ts_us", _BIN), ("ids", _BIN), ("cents", _BIN), ("n_seen", _LONG)]),
+        ("rows_anomaly", [("ts_us", _BIN), ("ids", _BIN), ("cents", _BIN)]),
         ("funnel", [("times", _BIN), ("seq", _LONG)]),
         (
             "sessionize",
@@ -1076,12 +1023,13 @@ def events_disordered_replay(spark, sf_dir):
 
 
 def test_stateful_over_window_disordered_replay(spark, events_disordered_replay):
-    """Design (b) under deliberately disordered input partitions: every row
-    (none is droppable — lateness < 15 s) is emitted with the RANGE sum
-    over rows SEEN UP TO ITS ARRIVAL BATCH — the operator's documented
-    arrival-prefix semantics (streaming/stateful.py: emitted rows are
-    never retro-corrected when a later straggler lands inside their
-    frame; the straggler itself still gets its exact, complete frame)."""
+    """The keyed-state RANGE sum under deliberately disordered input
+    partitions: every row (none is droppable — lateness < 15 s) is emitted
+    with the RANGE sum over rows SEEN UP TO ITS ARRIVAL BATCH — the
+    operator's documented arrival-prefix semantics (streaming/stateful.py:
+    emitted rows are never retro-corrected when a later straggler lands
+    inside their frame; the straggler itself still gets its exact,
+    complete frame)."""
     import numpy as np
     import pandas as pd
 
@@ -1261,7 +1209,6 @@ def test_drained_runs_leave_no_checkpoint_dirs(spark, sf_dir, tmp_path, monkeypa
     q = foreach_batch(
         spark.readStream.schema("id long").parquet(src),
         lambda bdf, bid: seen.append(bdf.count()),
-        available_now=True,
     )
     assert not q.isActive and sum(seen) == 5
     assert not list(tmp_path.glob("ckpt_*"))

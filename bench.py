@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Benchmark harness (SURVEY.md §7.2 M5).
+"""Fleet benchmark: every registered query, timed and split into layers.
 
 Runs every registered query at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints exactly ONE
@@ -12,6 +12,13 @@ Execution is forced with the noop sink (full pipeline runs, zero
 serialization cost to the driver) so timings measure the engine, not
 pandas conversion. One warmup query amortizes JVM/codegen startup into a
 separately-reported "warmup_sec".
+
+``bench_out.json`` carries the same result plus one record per query in
+"layers": ``build_s`` (the ``QUERIES[name]`` call), ``run_s`` (the noop
+write), and the Spark jobs, stages, tasks, executor CPU and run time,
+input/shuffle/output/spill bytes and driver gap that
+``perfbench.tracing.engine_by_op`` reads from the status store for the
+query's span. Host CPU steal over the timed phase is "steal_pct".
 """
 
 from __future__ import annotations
@@ -23,6 +30,46 @@ import time
 
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO_ROOT)
+
+from perfbench.host import cpu_times, steal_pct  # noqa: E402
+from perfbench.tracing import engine_by_op  # noqa: E402
+
+
+def run_query(spark, sf_dir: str, name: str) -> dict:
+    """One timed run of ``name`` and its layer record.
+
+    The status store keeps only ``spark.ui.retainedJobs`` jobs, so the
+    query's jobs are read right after it finishes. Its span is in epoch
+    seconds, the clock the store's submission times use; jobs that stream
+    threads submit inside the span are charged to the query."""
+    from ibis_flink_example_spark.queries import QUERIES
+
+    t0 = time.time()
+    df = QUERIES[name](spark, sf_dir)
+    t1 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.time()
+    eng = engine_by_op(spark, [{"id": name, "t0": t0, "t1": t2}])[name]
+    return {
+        "sec": round(t2 - t0, 4),
+        "build_s": round(t1 - t0, 4),
+        "run_s": round(t2 - t1, 4),
+        **{k: round(v, 4) if isinstance(v, float) else v for k, v in eng.items()},
+    }
+
+
+def time_queries(
+    spark, sf_dir: str, names: list[str]
+) -> tuple[dict[str, dict], dict[str, str]]:
+    """(layer record per query, error per failed query), one run each."""
+    records: dict[str, dict] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        try:
+            records[name] = run_query(spark, sf_dir, name)
+        except Exception as exc:  # one broken query must not sink the bench
+            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+    return records, errors
 
 
 def main() -> None:
@@ -44,12 +91,6 @@ def main() -> None:
 
     apply_session_conf(spark)
 
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
     # warmup: flagship once (JVM JIT, codegen, parquet footer caches)
     t0 = time.perf_counter()
     try:
@@ -60,89 +101,8 @@ def main() -> None:
         print(f"warmup failed: {exc}", file=sys.stderr)
     warmup_sec = time.perf_counter() - t0
 
-    # Machine-load normalization: wall timings on a shared machine swing
-    # ±50% with background load, so raw round-over-round totals are not
-    # comparable. Re-time pinned sentinel queries and report the ratio
-    # against their IDLE-machine reference, measured the same way.
-    #
-    # Round-15 method (v4), after the r14 finding (VERDICT #3) that the
-    # v3 four-sentinel basis read load_factor 1.03/0.80/0.73 on THREE
-    # same-code idle runs while the fleet raw moved <3% — ±30% swings in
-    # the published normalized total on identical code:
-    # - The basis is HEAVIER (~11 s/pass vs ~5 s): three multi-second
-    #   batch queries with distinct shapes (n-gram probe, window/SCD
-    #   chain, iterative k-means scans) carry ~90% of the weight, so
-    #   single-query JIT luck moves the factor by a few percent, not
-    #   tens. The two sub-second r7 sentinels stay for round-over-round
-    #   continuity but weigh little.
-    # - MEDIAN-of-3 per sentinel, not min-of-3: min selects exactly the
-    #   JIT-lucky extreme the r14 drift came from; the median of three
-    #   warm runs is stable against one lucky and one stalled run.
-    # - As before, ONLY the post-loop (fully-warm) pass feeds the
-    #   factor; the pre-loop pass is a single untimed-quality rep kept
-    #   for load-drift visibility.
-    # - Refs are median-of-3 fully-warm values measured on this machine
-    #   (r15, idle at measurement; see REF_BASIS). Treat load_factor as
-    #   a load DIAGNOSTIC; round-over-round comparisons should lean on
-    #   raw-total medians across >= 2 runs, with the normalized value as
-    #   a cross-check that big raw swings are load, not regressions.
-    # Re-based at END of r15 from the post-optimization idle run's
-    # post-loop medians (the provisional mid-r15 values predated the
-    # decontaminate/kmeans optimizations, which by themselves dragged
-    # load_factor to 0.58 on an idle machine). Refs must be re-based
-    # whenever a sentinel query itself is optimized.
-    # (per-sentinel median over THREE consecutive end-of-r15 idle runs —
-    # a single run's post-loop pass proved 10-20% JIT/page-cache
-    # sensitive per sentinel)
-    SENTINEL_REF_SEC = {
-        "over_range_sum_10s": 0.42,
-        "dedup_exact": 0.49,
-        "tpch_q9_product_profit": 0.83,
-        "decontaminate_ngram": 0.91,
-        "scd2_point_in_time": 1.57,
-        "kmeans_assign_embeddings": 1.44,
-    }
-    # hardware the SENTINEL_REF_SEC numbers were measured on — normalized
-    # values computed on any other machine silently compare
-    # incommensurables, so we null them out on a basis mismatch
-    REF_BASIS = {"cpus": 32, "os_cpu_count": 32, "machine": "x86_64"}
-    basis = {
-        "cpus": int(cpus),
-        "os_cpu_count": os.cpu_count(),
-        "machine": __import__("platform").machine(),
-    }
-    basis_match = basis == REF_BASIS
-
-    sentinel_passes: list[dict[str, float]] = []
-    sentinel_errors: dict[str, str] = {}
-
-    def calibration_pass(reps: int) -> None:
-        from statistics import median
-
-        idx = len(sentinel_passes) + 1
-        sec: dict[str, float] = {}
-        for name in SENTINEL_REF_SEC:
-            try:
-                sec[name] = median(run_once(name) for _ in range(reps))
-            except Exception as exc:
-                # keyed per pass: a pass-2 failure must not erase pass-1's
-                sentinel_errors[f"{name}_pass{idx}"] = (
-                    f"{type(exc).__name__}: {exc}"[:200]
-                )
-                print(f"sentinel {name} pass {idx} failed: {exc}", file=sys.stderr)
-        sentinel_passes.append(sec)
-
-    # pass 1: before the query loop — single rep, drift visibility only
-    # (never feeds the factor, so it doesn't pay the median-of-3 cost)
-    calibration_pass(reps=1)
-
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in QUERIES:
-        try:
-            timings[name] = round(run_once(name), 4)
-        except Exception as exc:  # one broken query must not sink the bench
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+    stat0 = cpu_times()
+    records, errors = time_queries(spark, sf_dir, list(QUERIES))
 
     # Outlier re-time: timing noise on a shared host is ONE-SIDED (a
     # transient stall only ever ADDS seconds — observed 1.5s -> 9.5s
@@ -151,13 +111,15 @@ def main() -> None:
     # landed in the total. Bounded: only the slowest dozen queries re-run,
     # ~10% extra wall time.
     # retried[name] = [first, retry] so a stall's magnitude stays visible
-    # in the snapshot even though min() feeds the total
+    # in the snapshot even though min() feeds the total; the layer record
+    # is the kept run's
     retried: dict[str, list] = {}
     retry_errors: dict[str, str] = {}
-    for name in sorted(timings, key=timings.get, reverse=True)[:12]:
-        first = timings[name]
+    slowest = sorted(records, key=lambda n: records[n]["sec"], reverse=True)[:12]
+    for name in slowest:
+        first = records[name]["sec"]
         try:
-            retry = round(run_once(name), 4)
+            rec = run_query(spark, sf_dir, name)
         except Exception as exc:
             # first run succeeded, so this flake is visible NOWHERE else —
             # record it (separately from errors: the query did produce a
@@ -165,50 +127,18 @@ def main() -> None:
             retry_errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"retry of {name} failed: {exc}", file=sys.stderr)
             continue
-        retried[name] = [first, retry]
-        timings[name] = min(first, retry)
+        retried[name] = [first, rec["sec"]]
+        if rec["sec"] < first:
+            records[name] = rec
+    steal = round(steal_pct(stat0, cpu_times()), 2)
 
-    calibration_pass(reps=3)  # pass 2 (median-of-3): feeds the factor
-
-    # The factor comes from the POST-LOOP pass only (fully-warm JVM — the
-    # reproducible state the refs were measured in); the pre-loop pass is
-    # reported for load-drift visibility. Publish ONLY when every sentinel
-    # ran post-loop AND the machine matches the reference basis: a partial
-    # sentinel set or different hardware has different load sensitivity
-    # than the reference, so normalized values from it would silently
-    # compare incommensurables.
-    post = sentinel_passes[-1] if sentinel_passes else {}
-    sentinel_sec = {name: post[name] for name in SENTINEL_REF_SEC if name in post}
-    load_factor = (
-        round(sum(sentinel_sec.values()) / sum(SENTINEL_REF_SEC.values()), 4)
-        if basis_match and len(sentinel_sec) == len(SENTINEL_REF_SEC)
-        else None
-    )
-
+    timings = {name: r["sec"] for name, r in records.items()}
     total = round(sum(timings.values()), 4)
-    # Normalization sanity bound (VERDICT r10 #5): the r10 driver run
-    # normalized 309.8s -> 235.6s under load_factor 1.31 — an
-    # over-correction vs the 300.8s idle truth, because sub-3s sentinels
-    # are MORE load-sensitive than the 230-query total they normalize.
-    # Outside the band where the factor is trustworthy (mild load, mild
-    # correction), publish the raw total only and say why.
-    value_norm = round(total / load_factor, 4) if load_factor else None
-    norm_suppressed = None
-    if value_norm is not None and (load_factor > 1.2 or load_factor < 0.8):
-        norm_suppressed = (
-            f"load_factor {load_factor} outside trust band [0.8, 1.2] "
-            f"(correction {abs(value_norm - total) / total:.0%} of raw); "
-            "sentinel-based normalization over-corrects under heavy load — "
-            "re-run on an idle machine for a comparable number"
-        )
-        value_norm = None
-    # Hot-query gate (VERDICT r11 #6): r11 shipped a query that was 42%
-    # of the entire bench because it was registered AFTER the last idle
-    # snapshot — nobody saw the number until the driver ran. Any single
-    # query above ~15% of the fleet total is either a plan defect or
-    # deserves its own explicit budget; surface it as a gate failure
-    # (non-zero exit) so it cannot ship silently again. Only enforced on
-    # meaningful totals — a tiny-SF smoke run's shares are noise.
+    # Hot-query gate: any single query above 15% of the fleet total is
+    # either a plan defect or deserves its own explicit budget, so it
+    # fails the run (non-zero exit) instead of shipping silently. Only
+    # enforced on meaningful totals — a tiny-SF smoke run's shares are
+    # noise.
     HOT_SHARE = 0.15
     hot_violations = {
         name: {"sec": t, "share": round(t / total, 3)}
@@ -226,29 +156,17 @@ def main() -> None:
         "errors": errors,
         "warmup_sec": round(warmup_sec, 4),
         "cpus": int(cpus),
-        # sentinel-normalized seconds: raw total divided by the measured
-        # machine-load factor (1.0 == the idle reference machine state);
-        # sentinel_sec = the POST-LOOP (fully-warm) best-of-3 values that
-        # feed the factor, sentinel_passes = both passes' raw values
-        "sentinel_sec": {k: round(v, 4) for k, v in sentinel_sec.items()},
-        "sentinel_passes": [
-            {k: round(v, 4) for k, v in p.items()} for p in sentinel_passes
-        ],
-        "sentinel_errors": sentinel_errors,
+        "executor_cpu_s": round(sum(r["executor_cpu_s"] for r in records.values()), 2),
+        "steal_pct": steal,
         "retried_queries": {k: v for k, v in sorted(retried.items())},
         "retry_errors": retry_errors,
-        "calibration_basis": basis,
-        "calibration_basis_match": basis_match,
-        "load_factor": load_factor,
-        "value_load_normalized": value_norm,
-        "normalization_suppressed": norm_suppressed,
         "hot_query_violations": hot_violations,
     }
     spark.stop()
     # Durable copy first: the driver's stdout capture truncates long tails,
     # so round-over-round comparison reads this file, not the console line.
     with open(os.path.join(REPO_ROOT, "bench_out.json"), "w") as f:
-        json.dump(result, f, indent=1)
+        json.dump({**result, "layers": records}, f, indent=1)
     # Console line kept as small as possible (compact separators, 2-dp
     # timings, empty fields dropped) to fit the capture window; full
     # precision lives in bench_out.json.
@@ -256,8 +174,6 @@ def main() -> None:
     compact["queries"] = {k: round(v, 2) for k, v in timings.items()}
     if not errors:
         compact.pop("errors")
-    if compact.get("normalization_suppressed") is None:
-        compact.pop("normalization_suppressed")
     if not hot_violations:
         compact.pop("hot_query_violations")
     print(json.dumps(compact, separators=(",", ":")))

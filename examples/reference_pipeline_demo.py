@@ -25,6 +25,7 @@ from __future__ import annotations
 import json
 import os
 import random
+import shutil
 import sys
 import tempfile
 import time
@@ -88,48 +89,52 @@ def main() -> None:
             schema=PAYMENT_MSG_SCHEMA,
         )
         result = payment_query_stream(payments)
-        q = write_kafka_json(
-            result,
-            bootstrap_servers=broker,
-            topic="sink",
-            checkpoint_location=tempfile.mkdtemp(prefix="ckpt_demo_"),
-            trigger_available_now=True,
-        )
-        q.awaitTermination()
+        with tempfile.TemporaryDirectory(prefix="ckpt_demo_") as ckpt:
+            q = write_kafka_json(
+                result,
+                bootstrap_servers=broker,
+                topic="sink",
+                checkpoint_location=ckpt,
+                trigger_available_now=True,
+            )
+            q.awaitTermination()
         print("wrote sink topic; read it back with spark.read.format('kafka')...")
         return
 
     # broker-less arm: identical decode → query → encode over a file stream
     d = tempfile.mkdtemp(prefix="payment_msgs_")
-    with open(os.path.join(d, "messages.jsonl"), "w") as fh:
-        fh.write("\n".join(generate_payment_messages()))
+    try:
+        with open(os.path.join(d, "messages.jsonl"), "w") as fh:
+            fh.write("\n".join(generate_payment_messages()))
 
-    raw = (
-        spark.readStream.schema("value string")
-        .text(d)
-        .select(F.col("value").cast("binary").alias("value"))
-    )
-    payments = decode_json_value(raw, PAYMENT_MSG_SCHEMA)
-    # the same query as the Kafka arm; a drained run emits every row's
-    # aggregate, so it equals the batch query row-for-row
-    result = run_available_now(payment_query_stream(payments), output_mode="append")
+        raw = (
+            spark.readStream.schema("value string")
+            .text(d)
+            .select(F.col("value").cast("binary").alias("value"))
+        )
+        payments = decode_json_value(raw, PAYMENT_MSG_SCHEMA)
+        # the same query as the Kafka arm; a drained run emits every row's
+        # aggregate, so it equals the batch query row-for-row
+        result = run_available_now(payment_query_stream(payments), output_mode="append")
 
-    # the reference's verification tap: 10 sink records
-    sink_rows = encode_json_value(result).limit(10).collect()
-    print("sink sample (reference README shape):")
-    for r in sink_rows:
-        print("  ", r["value"])
+        # the reference's verification tap: 10 sink records
+        sink_rows = encode_json_value(result).limit(10).collect()
+        print("sink sample (reference README shape):")
+        for r in sink_rows:
+            print("  ", r["value"])
 
-    # batch-vs-stream equivalence — the core correctness contract
-    batch_raw = spark.read.text(os.path.join(d, "*.jsonl")).select(
-        F.col("value").cast("binary").alias("value")
-    )
-    want = payment_query_batch(decode_json_value(batch_raw, PAYMENT_MSG_SCHEMA))
-    n_stream, n_batch = result.count(), want.count()
-    diff = result.exceptAll(want).count() + want.exceptAll(result).count()
-    print(f"stream rows={n_stream} batch rows={n_batch} symmetric diff={diff}")
-    assert diff == 0, "drained streaming run must equal the batch query"
-    print("OK: streaming result row-for-row equals the batch query.")
+        # batch-vs-stream equivalence — the core correctness contract
+        batch_raw = spark.read.text(os.path.join(d, "*.jsonl")).select(
+            F.col("value").cast("binary").alias("value")
+        )
+        want = payment_query_batch(decode_json_value(batch_raw, PAYMENT_MSG_SCHEMA))
+        n_stream, n_batch = result.count(), want.count()
+        diff = result.exceptAll(want).count() + want.exceptAll(result).count()
+        print(f"stream rows={n_stream} batch rows={n_batch} symmetric diff={diff}")
+        assert diff == 0, "drained streaming run must equal the batch query"
+        print("OK: streaming result row-for-row equals the batch query.")
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -153,24 +153,6 @@ def drop_hot_keys(
     )
 
 
-def perm_hash(h: Column, j: int) -> Column:
-    """Permutation j of a 64-bit shingle hash: ``xxhash64(h, j)`` — an
-    8-byte fixed-width rehash per permutation (codegen'd JVM intrinsic),
-    far cheaper than re-hashing the variable-length shingle string.
-
-    Two cheaper families are deliberately NOT used, both found the hard
-    way: (a) affine wrapping multiply-shift (mult_j·h + add_j) raises
-    ARITHMETIC_OVERFLOW under Spark 4's default ANSI mode; (b) the
-    double-hashing family g_j = h1 + j·h2 is LINEAR in j, so for any two
-    hashes the min-comparison outcome is monotone as j sweeps — the 64
-    positions are almost perfectly correlated and the Jaccard estimator's
-    variance explodes (caught by the Hypothesis envelope test with an
-    estimate of 0.0 against a true Jaccard of 0.5). Independent rehashes
-    per position are what the estimator's 1/sqrt(k) error bound needs,
-    and they're ~10% of the signature scan's cost anyway."""
-    return F.xxhash64(h, F.lit(j))
-
-
 # Java's \s spelled out — the canonical whitespace class for every
 # engine+oracle pair (Java \s includes U+000B, RE2/DuckDB \s does not;
 # the explicit class is IDENTICAL in both). Re-exported by operators/text.
@@ -228,16 +210,6 @@ def word_shingles(words_col: Column, n: int) -> Column:
         ).otherwise(F.array(F.concat_ws(" ", ws)))
 
     return F.element_at(F.transform(F.array(words_col), body), 1)
-
-
-def shingle_hashes(shingles: Column) -> Column:
-    """One 64-bit hash per shingle. Project this in its OWN select before
-    building a signature: each shingle string is then traversed exactly once
-    per row, and the per-permutation work downstream is fixed-width long
-    rehashing. (Kept as a separate projection on purpose — CollapseProject
-    will not inline a non-cheap expression referenced num_hashes times, so
-    the two-step structure is what guarantees single evaluation.)"""
-    return F.transform(shingles, lambda s: F.xxhash64(s))
 
 
 # See shingle_hash_rows: memoized higher-order Column trees keyed by
@@ -323,25 +295,6 @@ def shingle_hash_rows(
     return wh.select(F.col(id_col), explode_col)
 
 
-def signature_from_hashes(hash_col: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature from a pre-hashed shingle ARRAY: position j is
-    min over the array of ``perm_hash(h, j)``. Array-in/array-out form for
-    per-row use (tests, ad-hoc pairs); the scan path uses the row-exploded
-    ``minhash_signatures`` below — same estimator, but NOT bit-identical
-    signatures (the scan path hashes word-hash n-tuples instead of shingle
-    strings, so the underlying shingle keys differ).
-
-    NB: the inner lambda must take exactly ONE parameter — a two-parameter
-    lambda (e.g. ``lambda h, j=j``) is interpreted by ``F.transform`` as an
-    (element, index) function, silently binding the permutation number to
-    the array index and collapsing all permutations into one."""
-
-    def perm_min(j: int) -> Column:
-        return F.array_min(F.transform(hash_col, lambda h: perm_hash(h, j)))
-
-    return F.array(*[perm_min(j) for j in range(num_hashes)])
-
-
 def minhash_signatures(
     df: DataFrame,
     *,
@@ -368,9 +321,9 @@ def minhash_signatures(
     bytes regardless of text size. Duplicate shingles need no dedup — min()
     absorbs them.
 
-    NOT bit-compatible with the array-form ``signature_from_hashes`` (which
-    keeps the classical k-rehash estimator for per-row use); both satisfy
-    the same estimator contract."""
+    NOT bit-compatible with ``md5_minhash_band_rows`` (the classical
+    k-rehash estimator, kept for oracle replay); both satisfy the same
+    estimator contract."""
     rows = shingle_hash_rows(df, id_col=id_col, text_col=text_col, n=shingle_n)
     # bucket id projected ONCE per row; the per-bucket mins are then plain
     # integer compare-and-min updates in the codegen'd hash aggregate, with
@@ -549,12 +502,6 @@ def md5_minhash_band_rows(
         F.col("__e.band_idx").alias("band_idx"),
         F.col("__e.band_key").alias("band_key"),
     )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """Single-expression convenience form (hashes shingles inline). Prefer
-    shingle_hashes + signature_from_hashes in scans — see their docstrings."""
-    return signature_from_hashes(shingle_hashes(shingles), num_hashes)
 
 
 def minhash_similarity(sig_a: Column, sig_b: Column, num_hashes: int) -> Column:

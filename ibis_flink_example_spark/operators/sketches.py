@@ -24,9 +24,8 @@ from pyspark.sql import functions as F
 
 
 def _bucket(item: Column, depth_idx: Column | int, width: int) -> Column:
-    """Row ``depth_idx``'s bucket for ``item``: xxhash64(item, row) — the
-    same seeded-rehash family as MinHash's perm_hash (dedup.py:96);
-    pmod keeps the bucket non-negative."""
+    """Row ``depth_idx``'s bucket for ``item``: xxhash64(item, row), one
+    independent seeded rehash per row; pmod keeps the bucket non-negative."""
     return F.pmod(F.xxhash64(item, F.lit(depth_idx) if isinstance(depth_idx, int) else depth_idx), F.lit(width))
 
 

@@ -14,7 +14,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ibis_flink_example_spark.catalog import load_table, table_path
+from ibis_flink_example_spark.catalog import load_table, scratch_dir, table_path
 from ibis_flink_example_spark.functions.exact import dec_sum
 from ibis_flink_example_spark.operators.checkpoints import (
     release_eager_checkpoints,
@@ -143,20 +143,17 @@ def session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_STREAM_DIRS: dict[str, str] = {}
-
-
 def _stream_dir_for(path: str) -> str:
     """FileStreamSource needs a DIRECTORY; the fixture is a single parquet
-    file — expose it through a temp dir holding a symlink."""
+    file — expose it through a stable scratch dir holding a symlink."""
     import os
-    import tempfile
 
-    if path not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="stream_src_")
+    d = scratch_dir("stream_src", path)
+    try:
         os.symlink(path, os.path.join(d, os.path.basename(path)))
-        _STREAM_DIRS[path] = d
-    return _STREAM_DIRS[path]
+    except FileExistsError:  # made by an earlier run
+        pass
+    return d
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,7 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ibis_flink_example_spark.catalog import load_table
+from ibis_flink_example_spark.catalog import load_table, scratch_dir
 from ibis_flink_example_spark.functions.exact import money
 from ibis_flink_example_spark.operators.scd import scd2_from_changes
 from ibis_flink_example_spark.queries import query
@@ -93,15 +93,13 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     full extra pass), broadcast-join region, aggregate. Values must
     survive the text encode/decode byte-exactly for integer/string
     columns."""
-    import tempfile
-
     from ibis_flink_example_spark.schema import schema as mk_schema
     from ibis_flink_example_spark.sources.files import read_csv
 
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    d = tempfile.mkdtemp(prefix="csv_roundtrip_")
+    d = scratch_dir("csv_roundtrip", sf_dir)
     nation.write.mode("overwrite").option("header", True).csv(d)
     back = read_csv(
         spark,
@@ -137,8 +135,6 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema, aggregate with DECIMAL-exact money summing. Doubles round-trip
     via JSON textual encoding (Spark writes shortest-roundtrip decimal
     strings), so the sums are bit-identical to the direct rollup."""
-    import tempfile
-
     from ibis_flink_example_spark.schema import schema as mk_schema
     from ibis_flink_example_spark.sources.files import read_jsonl
 
@@ -147,7 +143,7 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") % 100 == 0)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
     )
-    d = tempfile.mkdtemp(prefix="jsonl_roundtrip_")
+    d = scratch_dir("jsonl_roundtrip", sf_dir)
     sl.write.mode("overwrite").json(d)
     back = read_jsonl(
         spark,
@@ -401,8 +397,6 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL-exact money sums. Exercises the second columnar format's
     timestamp round-trip under the UTC-pinned session (ORC stores
     zone-adjusted µs — values must come back bit-identical)."""
-    import tempfile
-
     from ibis_flink_example_spark.schema import schema as mk_schema
     from ibis_flink_example_spark.sources.files import read_orc
 
@@ -411,7 +405,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_orderkey") % 50 == 0)
         .select("l_orderkey", "l_returnflag", "l_extendedprice", "l_shipdate")
     )
-    d = tempfile.mkdtemp(prefix="orc_roundtrip_")
+    d = scratch_dir("orc_roundtrip", sf_dir)
     sl.write.mode("overwrite").orc(d)
     back = read_orc(
         spark,
@@ -742,7 +736,6 @@ def dpp_partitioned_orders_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the month-partitioned layout + calendar dim, return the DPP
     join (shared by the registered query and the plan-audit test, which
     additionally inspects the executed scan metrics)."""
-    from ibis_flink_example_spark.catalog import scratch_dir
 
     orders = load_table(spark, sf_dir, "orders")
     fact_dir = scratch_dir("dpp_orders_fact", sf_dir)
@@ -909,7 +902,6 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     at planning time, no data rewrite. (Default reads skip the footer
     merge for speed — the option is per-read, which is why the engine
     makes it explicit.)"""
-    from ibis_flink_example_spark.catalog import scratch_dir
     from ibis_flink_example_spark.functions.exact import money
 
     orders = load_table(spark, sf_dir, "orders")
@@ -952,7 +944,6 @@ def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the interchange format that still shows up at enterprise ingestion
     edges; the engine treats it as just another declared-schema file
     source with the same never-infer contract as CSV/JSONL/ORC."""
-    from ibis_flink_example_spark.catalog import scratch_dir
     from ibis_flink_example_spark.schema import schema as mk_schema
 
     sup = load_table(spark, sf_dir, "supplier").select(

@@ -331,7 +331,7 @@ def test_winnow_sketch_robust_to_small_edits(spark):
     assert overlap >= 6, f"sketch overlap {overlap}/8 too low for a 1-word edit"
 
 
-def test_decontamination_flags_planted_overlap(spark, sf_dir):
+def test_decontamination_flags_planted_overlap(spark, sf_dir, tmp_path):
     """A training doc sharing a 13-gram with an eval doc must be flagged;
     disjoint docs must not. (The registered query's fixture split may have
     zero natural hits, so the behavior is proven with planted rows.)"""
@@ -348,9 +348,7 @@ def test_decontamination_flags_planted_overlap(spark, sf_dir):
         ],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="decon_")
+    d = str(tmp_path)
     base.unionByName(planted).write.mode("overwrite").parquet(f"{d}/documents.parquet")
     from ibis_flink_example_spark.queries import QUERIES
 

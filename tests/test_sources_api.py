@@ -196,18 +196,15 @@ def test_register_views_enables_sql_by_name(spark, sf_dir):
     assert n_sql == dfs["events"].count()
 
 
-def test_add_connector_jar_registers_jar(spark):
+def test_add_connector_jar_registers_jar(spark, tmp_path):
     """S6 raw-SQL parity: ADD JAR through the SQL surface (the reference's
     connector-load statement). A minimal valid jar (empty zip) suffices —
     the statement must execute and the jar must appear in LIST JARS."""
-    import os
-    import tempfile
     import zipfile
 
     from ibis_flink_example_spark.sources.kafka import add_connector_jar
 
-    d = tempfile.mkdtemp(prefix="jar_")
-    jar = os.path.join(d, "fake-connector.jar")
+    jar = str(tmp_path / "fake-connector.jar")
     with zipfile.ZipFile(jar, "w") as zf:
         zf.writestr("META-INF/MANIFEST.MF", "Manifest-Version: 1.0\n")
     add_connector_jar(spark, jar)

@@ -408,7 +408,7 @@ def test_stateful_out_of_order_within_delay(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_payment_pipeline_end_to_end(spark):
+def test_payment_pipeline_end_to_end(spark, tmp_path):
     """Reference pipeline (SURVEY.md §1.5): JSON wire format → declared
     schema decode → watermark → streaming over-window → JSON sink encode,
     through a file stream standing in for Kafka: ``payment_query_stream``
@@ -423,7 +423,7 @@ def test_payment_pipeline_end_to_end(spark):
     )
 
     rng = random.Random(42)
-    d = tempfile.mkdtemp(prefix="payments_")
+    d = str(tmp_path)
     rows = []
     t0 = 1_700_000_000_000  # ms
     for i in range(300):
@@ -487,7 +487,6 @@ def test_payment_pipeline_end_to_end(spark):
     # (README.md:115-124 — {"province_id":..,"pay_amount":..})
     sample = encode_json_value(got.limit(1)).collect()
     assert sample and sample[0]["value"].startswith('{"province_id"')
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_streaming_anomaly_equals_batch(spark, sf_dir):

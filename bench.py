@@ -35,17 +35,21 @@ from perfbench.host import cpu_times, steal_pct  # noqa: E402
 from perfbench.tracing import engine_by_op  # noqa: E402
 
 
-def run_query(spark, sf_dir: str, name: str) -> dict:
+def run_query(spark, sf_dir: str, name: str, build=None) -> dict:
     """One timed run of ``name`` and its layer record.
 
-    The status store keeps only ``spark.ui.retainedJobs`` jobs, so the
-    query's jobs are read right after it finishes. Its span is in epoch
-    seconds, the clock the store's submission times use; jobs that stream
-    threads submit inside the span are charged to the query."""
-    from ibis_flink_example_spark.queries import QUERIES
+    ``build(spark, sf_dir)`` returns the DataFrame to run; it defaults to
+    the registered query ``QUERIES[name]``. The status store keeps only
+    ``spark.ui.retainedJobs`` jobs, so the query's jobs are read right
+    after it finishes. Its span is in epoch seconds, the clock the store's
+    submission times use; jobs that stream threads submit inside the span
+    are charged to the query."""
+    if build is None:
+        from ibis_flink_example_spark.queries import QUERIES
 
+        build = QUERIES[name]
     t0 = time.time()
-    df = QUERIES[name](spark, sf_dir)
+    df = build(spark, sf_dir)
     t1 = time.time()
     df.write.format("noop").mode("overwrite").save()
     t2 = time.time()

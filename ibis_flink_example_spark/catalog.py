@@ -43,10 +43,11 @@ def table_path(sf_dir: str, name: str) -> str:
 # pure repeated metadata work). The mtime in the key makes a rewritten
 # fixture (tests with tmp dirs) miss the memo; bounded like
 # _SPLIT_PROBE_CACHE below. Keyed on applicationId: one JVM's sessions
-# share files/catalog, and a plan built on session A executes correctly
-# when composed from session B of the same context (execution conf binds
-# at action time from the acting frame's session).
-_SCAN_CACHE: dict[tuple[str, str, int], DataFrame] = {}
+# share files/catalog. A frame executes under the conf of the session it
+# is bound to, so a hit from another session of the context (a
+# conf-isolated streaming clone) gets the memoized analyzed plan re-bound
+# to that session (~2 ms, no re-listing) instead of the memo's frame.
+_SCAN_CACHE: dict[tuple[str, str, int], tuple[SparkSession, DataFrame]] = {}
 _SCAN_CACHE_MAX = 256
 
 # applicationId is itself a py4j roundtrip (~5-20 ms under load) — cache it
@@ -75,12 +76,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     except Exception:  # pragma: no cover - stat/context edge; just re-read
         key = None
     if key is not None and key in _SCAN_CACHE:
-        return _SCAN_CACHE[key]
+        owner, df = _SCAN_CACHE[key]
+        if owner is spark:
+            return df
+        from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, df._jdf.logicalPlan()
+        )
+        return ClassicDataFrame(jdf, spark)
     df = read_parquet(spark, path)
     if key is not None:
         if len(_SCAN_CACHE) >= _SCAN_CACHE_MAX:
             _SCAN_CACHE.clear()
-        _SCAN_CACHE[key] = df
+        _SCAN_CACHE[key] = (spark, df)
     return df
 
 

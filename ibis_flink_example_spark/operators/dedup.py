@@ -68,8 +68,7 @@ def drop_hot_keys(
     per-micro-batch loop callers, where the eager arm's two actions per
     call are measurable overhead. Logging REQUIRES counting the hot set,
     so ``log_dropped=True`` takes the eager arm even under ``lazy=True``
-    (ADVICE r15: the lazy arm used to ignore it silently, making the
-    warning unfireable from callers that forward both flags).
+    (a caller that forwards both flags still gets its warning).
 
     Checkpoint lifetime (caller-release contract, same as chunking/text):
     when the hot set is non-empty its eager ``localCheckpoint`` blocks are
@@ -84,10 +83,10 @@ def drop_hot_keys(
     if lazy and log_dropped:
         lazy = False  # the warning needs the eager arm's hot-set count
     if lazy:
-        # Zero-action form for per-micro-batch callers (r15 ingest-cost
-        # trim): no eager checkpoint, no driver-side hot-set count — the
-        # hot set stays a lazy agg subtree and AQE supplies the same
-        # guarded-broadcast semantics at runtime (broadcast only when
+        # Zero-action form for per-micro-batch callers: no eager
+        # checkpoint, no driver-side hot-set count — the hot set stays a
+        # lazy agg subtree and AQE supplies the same guarded-broadcast
+        # semantics at runtime (broadcast only when
         # the materialized build side is small, shuffle anti-join
         # otherwise). The eager arm below pays two driver actions per
         # call for an empty-set fast path and explicit logging — right
@@ -107,8 +106,8 @@ def drop_hot_keys(
             # n_rows / max_rows_per_key keys (e.g. ~1e9 banded rows at a
             # 50k cap -> <= 2e4 keys); deployments beyond ~1e8 expected
             # hot keys should re-enable AQE instead of hinting. The bound
-            # is enforced at runtime when the caller can supply it
-            # (ADVICE r15): ``expected_rows`` (e.g. the ingest loops'
+            # is enforced at runtime when the caller can supply it:
+            # ``expected_rows`` (e.g. the ingest loops'
             # cumulative Observation row counts — zero extra actions)
             # caps the hot-set cardinality at
             # expected_rows / max_rows_per_key; past the broadcast
@@ -147,7 +146,7 @@ def drop_hot_keys(
         hot = F.broadcast(hot)
     # The hot-set checkpoint handle rides the returned plan so loop
     # callers can release_eager_checkpoints() per iteration instead of
-    # leaving the blocks to GC-driven cleanup (ADVICE r14).
+    # leaving the blocks to GC-driven cleanup.
     return attach_eager_checkpoints(
         df.join(hot, key_cols, "left_anti"), df, handles=(handle,)
     )
@@ -197,7 +196,7 @@ def word_shingles(words_col: Column, n: int) -> Column:
     re-evaluates every non-lambda-var subtree PER ELEMENT — with the
     usual ``words(text)`` argument inlined, the regexp split re-ran once
     per shingle instead of once per row (measured 5x on the shingle
-    scan, r15). A lambda-var reference is a constant-time lookup, so the
+    scan). A lambda-var reference is a constant-time lookup, so the
     split now runs exactly once per row regardless of caller shape."""
 
     def body(ws: Column) -> Column:
@@ -252,8 +251,7 @@ def shingle_hash_rows(
     # recompilation per call — painful for per-micro-batch callers
     # (streaming_neardup_ingest builds this once per batch). Column
     # objects are immutable unbound expression trees, safe to reuse
-    # across DataFrames and sessions (the r14 hoist, measured on the
-    # semdedup ingest sibling).
+    # across DataFrames and sessions.
     key = (
         (_gateway_id(), text_col, n, hash_col)
         if isinstance(text_col, str)
@@ -447,13 +445,13 @@ def md5_minhash_band_rows(
         # groupBy that computes the signature and stamps it on every band
         # row — so a banded-state consumer that needs it for exact
         # Jaccard verification can read it off the band join instead of
-        # maintaining a separate doc-keyed sizes table (the r12 VERDICT
-        # #2a fold). Counted as COUNT(DISTINCT __x0) — __x0 is already
-        # projected and md5-injective over shingles for any realistic
+        # maintaining a separate doc-keyed sizes table. Counted as
+        # COUNT(DISTINCT __x0) — __x0 is already projected and
+        # md5-injective over shingles for any realistic
         # per-doc count — so the carried value matches the documented
         # |shingles(doc)| even if a caller skips the pre-.distinct()
         # (a plain count(*) silently inflated under duplicate input
-        # while leaving the min-based signature unchanged — ADVICE r13).
+        # while leaving the min-based signature unchanged).
         # Cost: the mixed distinct/min aggregate plans an extra
         # aggregation level (~0.3 s per sf0.1 pass, measured) — callers
         # that STRUCTURALLY guarantee distinct (id, shingle) input (e.g.
@@ -473,7 +471,7 @@ def md5_minhash_band_rows(
     # instead of stamping a per-batch ``F.lit(arrival)`` column — a literal
     # that changes every micro-batch makes the generated stage code differ
     # per batch and defeats the codegen cache (measured ~0.5-1 s of
-    # recompilation per batch on the md5/min-agg tree, r15).
+    # recompilation per batch on the md5/min-agg tree).
     for x in carry_cols:
         aggs.append(F.min(F.col(x)).alias(x))
     sigs = hexed.groupBy(id_col).agg(*aggs)
@@ -581,8 +579,8 @@ def minhash_lsh_candidates(
         log_dropped=log_dropped,
         # lazy: batch sessions run AQE, which supplies the same guarded
         # broadcast anti-join at runtime — zero driver actions instead of
-        # the eager arm's checkpoint + count per call (r15, guide §1.3;
-        # interleaved A/B across the dhk-using batch queries: ~0.5 s/query)
+        # the eager arm's checkpoint + count per call (interleaved A/B
+        # across the batch queries that cap hot keys: ~0.5 s/query)
         lazy=True,
     )
     a = banded.alias("a")
@@ -1041,7 +1039,7 @@ def hamming_band_pairs(
         max_rows_per_key=max_bucket_size,
         what=what,
         log_dropped=log_dropped,
-        lazy=True,  # AQE-guarded anti-join; zero driver actions (r15)
+        lazy=True,  # AQE-guarded anti-join; zero driver actions
     )
     a, b = chunks.alias("a"), chunks.alias("b")
     return (
@@ -1105,7 +1103,7 @@ def ngram_jaccard_pairs(
         max_rows_per_key=max_doc_freq,
         what="shingle (document frequency)",
         log_dropped=log_dropped,
-        lazy=True,  # AQE-guarded anti-join; zero driver actions (r15)
+        lazy=True,  # AQE-guarded anti-join; zero driver actions
     )
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
     a = sh.alias("a")

@@ -54,35 +54,30 @@ from ibis_flink_example_spark import queries_analytics  # noqa: E402,F401
 
 # The external correctness harness verifies the FIRST 50 registry entries
 # against their DuckDB oracles, so registry order is a verification budget.
-# Round-16 rotation (VERDICT r15 top-next #2 — exactly full at
-# 2 + 5 + 2 + 41 = 50): sentinels; then EVERY entry of r15's
-# _NEXT_ROUND_FIRST_ROWS queue (the four r9-cohort deferrals — the
-# stalest external rows in the fleet — plus state_table_retention,
-# registered late-r15 with zero external rows); then BOTH heavy ingests
-# (streaming_semdedup_ingest restructured THIS round — probe/pool from
-# the inline batch frame — and streaming_minhash_neardup_ingest, whose
-# r15 ride-along refactor never got an external row, last seated r13);
-# then 41 of the 48-query r10-era cohort (the stalest remaining
-# rows, including every ORACLE-BEARING r15 bind_col/image/
-# pair-generator touchee: decontaminate_ngram, text_repetition,
-# image_phash_neardup_pairs, ngram_jaccard_pairs, embedding_quantize,
-# ...; the rows-only dedup_simhash_pairs is excluded — see the
-# _NEXT_ROUND_FIRST_ROWS note).
+# Rotation policy: the two pinned sentinels come first, then every entry of
+# the previous rotation's deferral queue, then the queries whose external
+# rows are stalest. Whatever does not fit in the 50 slots goes into
+# _NEXT_ROUND_FIRST_ROWS, and the next rotation seats it right after the
+# sentinels. Entries past the window fall back to registration order.
 _DRIVER_PRIORITY: tuple[str, ...] = (
-    # pinned sentinels (green every round; regression tripwires)
+    # pinned sentinels (regression tripwires)
     "over_range_sum_10s",
     "dedup_exact",
-    # first-rows: the r15 deferral queue, seated in full (VERDICT #2)
+    # the previous rotation's deferral queue, seated in full
+    "filtered_aggs",
+    "join_null_safe",
+    "posexplode_priorities",
+    "sample_hash_10pct",
+    "window_distribution",
+    "window_lag_lead",
+    # stalest external rows
     "slide_5m_1m",
     "session_30m",
     "streaming_static_join",
     "warehouse_roundtrip",
     "state_table_retention",
-    # the heavy ingests, so this round's restructure (semdedup) and the
-    # r15 ride-alongs (minhash) get fresh external rows
     "streaming_semdedup_ingest",
     "streaming_minhash_neardup_ingest",
-    # 41 of the r10-era cohort (stalest external rows; r15-touched first)
     "decontaminate_ngram",
     "text_repetition",
     "text_fingerprint",
@@ -118,37 +113,19 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "over_range_sum_1h",
     "cohort_retention_weekly",
     "event_transitions",
+)
+
+
+# Queries that did not fit in this rotation's 50-slot window: the next
+# rotation seats these first, right after the sentinels. Tests check that
+# every entry is registered, oracle-bearing and outside the current window.
+_NEXT_ROUND_FIRST_ROWS: tuple[str, ...] = (
     "events_anomaly_zscore",
     "funnel_view_click_purchase",
     "csv_roundtrip",
     "jsonl_roundtrip",
     "merge_upsert_customers",
     "data_quality_audit",
-    # positions 51+: the seven r10 deferrals (queued below), then the
-    # r10-r15 greens and the rest of the registry in registration order.
-)
-
-
-# Queries whose external-row seating did NOT fit this round's 50-slot
-# window: the NEXT rotation must seat these FIRST (ahead of any
-# re-verify cohort). Machine-readable so the deferral cannot rot in a
-# comment — tests enforce that every entry is registered, oracle-bearing
-# and genuinely outside the current window, and the next round's
-# rotation empties it. (All seven have old r10 external rows — the queue
-# pins the staleness repayment order, not a zero-evidence debt. They
-# were chosen as the cohort's simplest single-exchange relational/window
-# forms, each untouched since r10 and pinned locally by the full DuckDB
-# oracle gate + the fleet plan-hygiene audit. dedup_simhash_pairs — the
-# cohort's one rows-only entry — is NOT queued (the queue is for owed
-# FULL-oracle rows; a rows-only slot verifies little, the r15 lesson
-# from dedup_minhash) and waits for a later cohort rotation.)
-_NEXT_ROUND_FIRST_ROWS: tuple[str, ...] = (
-    "filtered_aggs",  # r10 cohort, deferred from the r16 window
-    "join_null_safe",  # r10 cohort, deferred from the r16 window
-    "posexplode_priorities",  # r10 cohort, deferred from the r16 window
-    "sample_hash_10pct",  # r10 cohort, deferred from the r16 window
-    "window_distribution",  # r10 cohort, deferred from the r16 window
-    "window_lag_lead",  # r10 cohort, deferred from the r16 window
 )
 
 

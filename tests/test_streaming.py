@@ -8,6 +8,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import shutil
 import tempfile
 
@@ -1259,3 +1260,44 @@ def test_replay_disorder_raises(spark, tmp_path, monkeypatch, files):
             columns=("id",),
             step=lambda bdf, ctx: ctx.probe(bdf),
         )
+
+
+@pytest.mark.parametrize("rooted_at", ["batch", "scan"])
+def test_memoized_scan_runs_under_the_ingest_clone_conf(spark, sf_dir, rooted_at):
+    """A fixture scan that ``catalog.load_table`` memoized on the base
+    session and that a ``replay_ingest`` step then consumes runs under the
+    step's conf-isolated clone: no AQE below the ingest's batch-size
+    threshold, and the clone's shuffle partitions — whether the step's
+    frame is rooted at the batch or at the scan the clone looked up."""
+    from ibis_flink_example_spark import catalog
+    from ibis_flink_example_spark.streaming import ingest
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.shuffle.partitions") != str(ingest.STATE_PARTS)
+    memo = catalog.load_table(spark, sf_dir, "customer")
+    assert catalog.load_table(spark, sf_dir, "customer") is memo
+    plans = []
+
+    def step(bdf, ctx):
+        if ctx.probe(bdf) is None:
+            return
+        scan = catalog.load_table(bdf.sparkSession, sf_dir, "customer")
+        keys = bdf.select(F.col("c_custkey").alias("k"))
+        if rooted_at == "batch":
+            df = keys.join(scan, keys.k == scan.c_custkey)
+        else:
+            df = scan.join(keys, scan.c_custkey == keys.k)
+        df = df.groupBy("c_nationkey").count()
+        df.collect()
+        plans.append(df._jdf.queryExecution().executedPlan())
+
+    ingest.replay_ingest(
+        spark, sf_dir, f"memo_scan_replay_{rooted_at}", source="customer",
+        columns=("c_custkey",), step=step,
+    )
+    assert plans
+    for plan in plans:
+        text = plan.toString()
+        assert plan.nodeName() != "AdaptiveSparkPlan", text
+        parts = re.findall(r"Exchange hashpartitioning\([^)]*, (\d+)\)", text)
+        assert parts and set(parts) == {str(ingest.STATE_PARTS)}, text
